@@ -1,6 +1,12 @@
 """Array/string kernels — Spark-SQL expressions of the reference's
 list utilities (SURVEY.md §2.4 A2-A4, §2.7). All JVM-side
 (whole-stage-codegen), no Python boundary.
+
+Each kernel has ONE implementation, as SQL text (``*_sql``): plan
+builders compose these into a single string per projection, because
+pyspark pays ~14 py4j round trips per ``F.col`` and ~35 per
+``F.when`` but only ~6 for a whole ``F.expr``. The Column functions
+are thin ``F.expr`` wrappers for callers holding Columns.
 """
 
 from __future__ import annotations
@@ -8,34 +14,64 @@ from __future__ import annotations
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 
+#: typed empty string array (a bare ``array()`` is array<void>)
+EMPTY_ARR = "CAST(array() AS array<string>)"
 
-def split_pipe(col: Column | str) -> Column:
+
+def q(s: str) -> str:
+    """Python string → Spark SQL string literal. Backslashes are
+    escaped too: the parser unescapes them, so an unescaped regex like
+    ``\\.`` would silently lose its backslash."""
+    return "'" + s.replace("\\", "\\\\").replace("'", "\\'") + "'"
+
+
+_PIPE_RE = q(r"\|")  # split() takes a regex
+
+
+def _sql(c: Column | str) -> str:
+    """A column name / SQL text as is; a Column as its SQL rendering."""
+    return c if isinstance(c, str) else c._jc.toString()
+
+
+def split_pipe_sql(c: str) -> str:
     """Pipe-joined string → array<string> with empties removed.
 
-    '' and NULL both become []. array_remove, not F.filter: lambda
+    '' and NULL both become []. array_remove, not filter(): lambda
     higher-order functions are CodegenFallback (interpreted per row,
     allocation-heavy) — this stays inside whole-stage codegen."""
-    c = F.col(col) if isinstance(col, str) else col
-    return F.array_remove(F.split(F.coalesce(c, F.lit("")), r"\|"), "")
+    return f"array_remove(split(coalesce({c}, ''), {_PIPE_RE}), '')"
 
 
-def sql_join_lst(arr: Column) -> Column:
+def join_lst_sql(arr: str) -> str:
     """The reference's join_lst (of.py:544-553): members may themselves
     be pipe-joined — split each on '|', flatten, dedup, SORT (replaces
     the reference's nondeterministic Python-set order), rejoin with '|'.
 
     HOF-free formulation (hot path — runs once per output row per
     multi-value field): members are pipe-joined strings, so joining
-    them all with '|' and splitting ONCE flattens without the
-    interpreted transform/flatten/filter chain."""
-    joined = F.array_join(arr, "|")  # skips NULL members
-    parts = F.array_remove(F.split(joined, r"\|"), "")
-    return F.array_join(F.sort_array(F.array_distinct(parts)), "|")
+    them all with '|' (array_join skips NULL members) and splitting
+    ONCE flattens without the interpreted transform/flatten/filter
+    chain."""
+    parts = f"array_remove(split(array_join({arr}, '|'), {_PIPE_RE}), '')"
+    return f"array_join(sort_array(array_distinct({parts})), '|')"
 
 
-def concat_unique(a: Column, b: Column) -> Column:
+def concat_unique_sql(a: str, b: str) -> str:
     """Set-union of two array operands, order-preserving
     (ref concat, of.py:555-568)."""
-    na = F.coalesce(a, F.array().cast("array<string>"))
-    nb = F.coalesce(b, F.array().cast("array<string>"))
-    return F.array_distinct(F.concat(na, nb))
+    return (
+        f"array_distinct(concat(coalesce({a}, {EMPTY_ARR}), "
+        f"coalesce({b}, {EMPTY_ARR})))"
+    )
+
+
+def split_pipe(col: Column | str) -> Column:
+    return F.expr(split_pipe_sql(_sql(col)))
+
+
+def sql_join_lst(arr: Column | str) -> Column:
+    return F.expr(join_lst_sql(_sql(arr)))
+
+
+def concat_unique(a: Column | str, b: Column | str) -> Column:
+    return F.expr(concat_unique_sql(_sql(a), _sql(b)))

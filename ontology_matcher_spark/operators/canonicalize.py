@@ -130,20 +130,19 @@ def connected_components(
     src: str = "src",
     dst: str = "dst",
     max_iter: int = 30,
-    rounds_per_materialize: int = 1,
     small_graph_threshold: int | None = SMALL_GRAPH_EDGES,
 ) -> DataFrame:
     """Undirected CC → DataFrame(node, root) where root = the
     lexicographically smallest member of the node's component
     (self-rows included for every node appearing in ``edges``).
 
-    ``rounds_per_materialize``: keep at 1. A star-round references its
-    input ~4-6 times (symmetrize + agg + join on each side), and
-    WITHOUT a materialization between rounds those references
-    re-execute the previous round's whole subplan inside one job —
-    measured interleaved on the bench graph at local[16]: 1 round per
-    write = 5.8-17s, 2 rounds per write = 17.8-30s. The per-round
-    write is what makes each upstream reference a cheap parquet scan.
+    Each star-round is materialized. A round references its input
+    ~4-6 times (symmetrize + agg + join on each side), and WITHOUT a
+    materialization between rounds those references re-execute the
+    previous round's whole subplan inside one job — measured
+    interleaved on the bench graph at local[16]: 1 round per write =
+    5.8-17s, 2 rounds per write = 17.8-30s. The per-round write is
+    what makes each upstream reference a cheap parquet scan.
     Convergence is detected from the signature riding each write
     (bit_xor, order-independent — a sum of hashes overflows under
     ANSI mode); each round costs exactly ONE action."""
@@ -188,8 +187,7 @@ def connected_components(
     from pyspark.sql.observation import Observation
 
     for rnd in range(max_iter):
-        for _ in range(rounds_per_materialize):
-            e = _star_round(e)
+        e = _star_round(e)
         # cut lineage per materialization; the previous table is
         # dropped as soon as this one lands (no storage-memory leak).
         obs = Observation(f"cc_sig_{rnd}")

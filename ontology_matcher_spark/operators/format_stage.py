@@ -29,9 +29,10 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from ontology_matcher_spark.functions.arrays import (
-    concat_unique,
-    split_pipe,
-    sql_join_lst,
+    EMPTY_ARR,
+    concat_unique_sql,
+    join_lst_sql,
+    split_pipe_sql,
 )
 from ontology_matcher_spark.ontology_types import OntologyType, Strategy
 from ontology_matcher_spark.operators.candidates import cand_col
@@ -43,37 +44,28 @@ _RECORD_COLS = [
 ]
 
 
-_EMPTY_ARR = "array<string>"
-
-
 def metadata_table(terms: DataFrame) -> DataFrame:
     """Term dictionary → md_-prefixed metadata columns for the
     canonical-id broadcast join. Tolerates dictionaries without the
     gene/xref metadata columns (pre-round-2 tables)."""
     cols = set(terms.columns)
-    sym = F.col("symbol") if "symbol" in cols else F.lit("")
-    tax = F.col("taxid") if "taxid" in cols else F.lit("")
-    xr = (
-        F.col("xrefs") if "xrefs" in cols else F.array().cast(_EMPTY_ARR)
-    )
-    pm = (
-        F.col("pmids") if "pmids" in cols else F.array().cast(_EMPTY_ARR)
-    )
-    return terms.select(
-        F.col("curie").alias("md_curie"),
-        F.col("name").alias("md_name"),
-        F.col("description").alias("md_description"),
-        F.col("synonyms").alias("md_synonyms"),
-        sym.alias("md_symbol"),
-        tax.alias("md_taxid"),
-        xr.alias("md_xrefs"),
-        pm.alias("md_pmids"),
+    opt = lambda c, missing: c if c in cols else missing  # noqa: E731
+    return terms.selectExpr(
+        "curie AS md_curie",
+        "name AS md_name",
+        "description AS md_description",
+        "synonyms AS md_synonyms",
+        opt("symbol", "''") + " AS md_symbol",
+        opt("taxid", "''") + " AS md_taxid",
+        opt("xrefs", EMPTY_ARR) + " AS md_xrefs",
+        opt("pmids", EMPTY_ARR) + " AS md_pmids",
     )
 
 
-def metadata_exprs(mode: str, alias_arr) -> dict:
-    """Output-column expressions for one metadata mode over a frame
-    carrying r_* (raw record) and md_* (dictionary) columns.
+def metadata_exprs(mode: str, alias_arr: str) -> dict[str, str]:
+    """Output-column SQL expressions for one metadata mode over a frame
+    carrying r_* (raw record) and md_* (dictionary) columns;
+    ``alias_arr`` is the SQL text of the alias-id array.
 
     - "default" (ontology_formatter.py:656-673): name/description fall
       back md→raw; synonyms = md ∪ raw; taxid = raw; xrefs =
@@ -85,41 +77,44 @@ def metadata_exprs(mode: str, alias_arr) -> dict:
     Metadata applies only when the canonical id matched a term row
     (md_found) — the reference skips format_by_metadata when the
     metadata dict is empty (ontology_formatter.py:699-700)."""
-    nn = lambda c: F.when(F.col(c) != "", F.col(c))  # noqa: E731  ''→NULL
-    md_found = F.col("md_curie").isNotNull()
-    empty = F.array().cast(_EMPTY_ARR)
-    md_xr = F.coalesce(F.col("md_xrefs"), empty)
-    md_syn = F.coalesce(F.col("md_synonyms"), empty)
-    md_pm = F.coalesce(F.col("md_pmids"), empty)
-    xrefs = sql_join_lst(
-        concat_unique(concat_unique(alias_arr, md_xr), split_pipe("r_xrefs"))
+    nn = lambda c: f"CASE WHEN {c} != '' THEN {c} END"  # noqa: E731  ''→NULL
+    md_found = "md_curie IS NOT NULL"
+    md_xr = f"coalesce(md_xrefs, {EMPTY_ARR})"
+    md_syn = f"coalesce(md_synonyms, {EMPTY_ARR})"
+    md_pm = f"coalesce(md_pmids, {EMPTY_ARR})"
+    xrefs = join_lst_sql(
+        concat_unique_sql(
+            concat_unique_sql(alias_arr, md_xr), split_pipe_sql("r_xrefs")
+        )
     )
-    pmids = sql_join_lst(concat_unique(md_pm, split_pipe("r_pmids")))
+    pmids = join_lst_sql(concat_unique_sql(md_pm, split_pipe_sql("r_pmids")))
     if mode == "gene":
-        md_name_arr = F.when(
-            md_found & (F.col("md_name") != ""), F.array(F.col("md_name"))
-        ).otherwise(empty)
+        md_name_arr = (
+            f"CASE WHEN {md_found} AND md_name != '' THEN array(md_name) "
+            f"ELSE {EMPTY_ARR} END"
+        )
         return {
-            "name": F.coalesce(nn("md_symbol"), nn("md_name"), F.col("r_name")),
-            "description": F.when(
-                md_found, F.coalesce(nn("md_description"), F.lit(""))
-            ).otherwise(F.col("r_description")),
-            "taxid": F.when(
-                md_found, F.coalesce(nn("md_taxid"), F.lit(""))
-            ).otherwise(F.col("r_taxid")),
-            "synonyms": sql_join_lst(
-                concat_unique(
-                    concat_unique(md_syn, md_name_arr), split_pipe("r_synonyms")
+            "name": f"coalesce({nn('md_symbol')}, {nn('md_name')}, r_name)",
+            "description": f"CASE WHEN {md_found} THEN "
+            f"coalesce({nn('md_description')}, '') ELSE r_description END",
+            "taxid": f"CASE WHEN {md_found} THEN "
+            f"coalesce({nn('md_taxid')}, '') ELSE r_taxid END",
+            "synonyms": join_lst_sql(
+                concat_unique_sql(
+                    concat_unique_sql(md_syn, md_name_arr),
+                    split_pipe_sql("r_synonyms"),
                 )
             ),
             "xrefs": xrefs,
             "pmids": pmids,
         }
     return {
-        "name": F.coalesce(nn("md_name"), F.col("r_name")),
-        "description": F.coalesce(nn("md_description"), F.col("r_description")),
-        "taxid": F.col("r_taxid"),
-        "synonyms": sql_join_lst(concat_unique(md_syn, split_pipe("r_synonyms"))),
+        "name": f"coalesce({nn('md_name')}, r_name)",
+        "description": f"coalesce({nn('md_description')}, r_description)",
+        "taxid": "r_taxid",
+        "synonyms": join_lst_sql(
+            concat_unique_sql(md_syn, split_pipe_sql("r_synonyms"))
+        ),
         "xrefs": xrefs,
         "pmids": pmids,
     }
@@ -176,18 +171,11 @@ def format_output(
 
     # candidate arrays never hold NULLs (collect_set) — array_remove
     # keeps this codegen'd, no lambda HOF
-    alias_arr = F.array_distinct(
-        F.array_remove(F.concat(*[F.col(c) for c in non_default_cols]), "")
+    alias_arr = (
+        f"array_distinct(array_remove(concat({', '.join(non_default_cols)}), ''))"
     )
     o = metadata_exprs(otype.metadata_mode, alias_arr)
-    conv = (
-        conv.withColumn("o_name", o["name"])
-        .withColumn("o_description", o["description"])
-        .withColumn("o_synonyms", o["synonyms"])
-        .withColumn("o_taxid", o["taxid"])
-        .withColumn("o_pmids", o["pmids"])
-        .withColumn("o_xrefs", o["xrefs"])
-    )
+    conv = conv.withColumns({f"o_{c}": F.expr(e) for c, e in o.items()})
 
     resolved = F.col("canonical").isNotNull()
     formatted_conv = conv.select(

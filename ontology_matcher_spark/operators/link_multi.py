@@ -21,13 +21,18 @@ asserts multi(union) == ∪_t per_type(t) row-for-row.
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ontology_matcher_spark.functions.arrays import EMPTY_ARR, q
 from ontology_matcher_spark.ontology_types import (
     CURIE_LOCAL_PATTERN,
     OntologyType,
     Strategy,
+)
+from ontology_matcher_spark.operators.format_stage import (
+    metadata_exprs,
+    metadata_table,
 )
 from ontology_matcher_spark.oracle import (
     R_BAD_FORMAT,
@@ -36,7 +41,6 @@ from ontology_matcher_spark.oracle import (
     R_NO_RESULTS,
     R_UNIQUE_MULTI,
 )
-from ontology_matcher_spark.schemas import FAILED_COLUMNS, FORMATTED_COLUMNS
 
 _RECORD_COLS = [
     "id", "name", "label", "resource", "description",
@@ -44,15 +48,13 @@ _RECORD_COLS = [
 ]
 
 
-def _label_case(types: dict[str, OntologyType], fn) -> Column:
-    """when(label == t, fn(otype)) ladder over the types."""
-    out = None
-    for tname, otype in types.items():
-        branch = F.when(F.col("label") == tname, fn(otype))
-        out = branch if out is None else out.when(
-            F.col("label") == tname, fn(otype)
-        )
-    return out
+def _label_case(types: dict[str, OntologyType], label: str, fn) -> str:
+    """SQL ``CASE WHEN label = t THEN fn(otype) ...`` ladder over the
+    types; NULL for any other label."""
+    whens = " ".join(
+        f"WHEN {label} = {q(t)} THEN ({fn(o)})" for t, o in types.items()
+    )
+    return f"(CASE {whens} END)"
 
 
 def link_mentions_multi(
@@ -64,37 +66,43 @@ def link_mentions_multi(
 ) -> tuple[DataFrame, DataFrame]:
     """Mixed-label mention table → (formatted, failed_formatted) in one
     dataflow pass. Output equals the union of per-type link_mentions
-    runs restricted to each label."""
+    runs restricted to each label.
+
+    Every label-conditional expression is composed as SQL text and
+    handed to the JVM in one ``F.expr``/``selectExpr`` per projection:
+    the Catalyst tree is the one the Column API would build, but the
+    driver pays a few py4j round trips per projection instead of
+    ~14-35 per Column node (~20k for five types)."""
     all_ns: list[str] = sorted({ns for t in types.values() for ns in t.choices})
+    unique = "true" if strategy == Strategy.UNIQUE else "false"
+    mixture = "true" if strategy == Strategy.MIXTURE else "false"
 
     # ---- validate (label-conditional CURIE check) --------------------
     df = mentions
     if "idx" not in df.columns:
         df = df.withColumn("idx", F.monotonically_increasing_id())
-    has_colon = F.col("id").contains(":")
+    has_colon = "contains(id, ':')"
+    prefix_ok = _label_case(
+        types, "label", lambda o: f"ns IN ({', '.join(map(q, o.choices))})"
+    )
+    local_re = q(f"^{CURIE_LOCAL_PATTERN}$")
     df = (
         df.withColumn(
             "ns",
-            F.when(has_colon, F.substring_index("id", ":", 1)).otherwise(F.lit("")),
+            F.expr(f"CASE WHEN {has_colon} THEN substring_index(id, ':', 1) ELSE '' END"),
         )
         .withColumn(
             "local_id",
-            F.when(
-                has_colon, F.expr("substring(id, instr(id, ':') + 1)")
-            ).otherwise(F.lit("")),
+            F.expr(
+                f"CASE WHEN {has_colon} THEN substring(id, instr(id, ':') + 1) ELSE '' END"
+            ),
         )
         .withColumn(
             "format_reason",
-            F.when(F.col("id").isNull() | ~has_colon, F.lit(R_BAD_FORMAT))
-            .when(
-                ~_label_case(
-                    types, lambda o: F.col("ns").isin(list(o.choices))
-                ),
-                F.lit(R_BAD_PREFIX),
-            )
-            .when(
-                ~F.col("local_id").rlike(f"^{CURIE_LOCAL_PATTERN}$"),
-                F.lit(R_BAD_FORMAT),
+            F.expr(
+                f"CASE WHEN id IS NULL OR (NOT {has_colon}) THEN {q(R_BAD_FORMAT)} "
+                f"WHEN NOT {prefix_ok} THEN {q(R_BAD_PREFIX)} "
+                f"WHEN NOT (local_id RLIKE {local_re}) THEN {q(R_BAD_FORMAT)} END"
             ),
         )
     )
@@ -113,18 +121,18 @@ def link_mentions_multi(
     # dictionary is pre-distinct'd so counts equal the reference's
     # set sizes.
     edges = (
-        xref_edges.where(F.col("dst_ns").isin(all_ns))
+        xref_edges.where(F.expr(f"dst_ns IN ({', '.join(map(q, all_ns))})"))
         .select("src_curie", "dst_ns", "dst_curie")
         .distinct()
     )
     per_ns = edges.groupBy("src_curie", "dst_ns").agg(
-        F.count(F.lit(1)).alias("cnt"),
-        F.sort_array(F.collect_set("dst_curie")).alias("cands"),
+        F.expr("count(1) AS cnt"),
+        F.expr("sort_array(collect_set(dst_curie)) AS cands"),
     )
     emap = per_ns.groupBy("src_curie").agg(
-        F.map_from_entries(
-            F.collect_list(F.struct("dst_ns", F.struct("cnt", "cands")))
-        ).alias("xmap")
+        F.expr(
+            "map_from_entries(collect_list(struct(dst_ns, struct(cnt, cands)))) AS xmap"
+        )
     )
     # ONE pass for valid AND invalid rows (the round-5 shape ran
     # separate join subtrees for the converted and failed sides of the
@@ -133,89 +141,54 @@ def link_mentions_multi(
     # twice). Invalid rows ride the same broadcast probe — their
     # routing columns are garbage gated off by format_reason, which
     # takes precedence in the reason coalesce below.
-    m = df.select(
-        "idx",
-        F.col("id").alias("raw_id"),
-        "ns",
-        F.col("label").alias("mlabel"),
-        "format_reason",
-    )
-    joined = m.join(F.broadcast(emap), m.raw_id == emap.src_curie, "left")
-
-    _EMPTY = F.array().cast("array<string>")
+    m = df.selectExpr("idx", "id AS raw_id", "ns", "label AS mlabel", "format_reason")
+    joined = m.join(F.broadcast(emap), F.expr("raw_id = src_curie"), "left")
 
     # flatten the map ONCE into per-ns (count, candidate-set) columns:
     # every routing ladder below then references small flat
     # expressions — keeping each generated function under the codegen
     # size limits — instead of repeating GetMapValue chains per branch
     ns_i = {ns: i for i, ns in enumerate(all_ns)}
-    joined = joined.select(
+    joined = joined.selectExpr(
         "idx",
         "raw_id",
         "ns",
         "mlabel",
         "format_reason",
+        *[f"coalesce(xmap[{q(ns)}].cnt, 0) AS c_{i}" for ns, i in ns_i.items()],
         *[
-            F.coalesce(F.col("xmap")[ns]["cnt"], F.lit(0)).alias(f"c_{i}")
-            for ns, i in ns_i.items()
-        ],
-        *[
-            F.coalesce(F.col("xmap")[ns]["cands"], _EMPTY).alias(f"a_{i}")
+            f"coalesce(xmap[{q(ns)}].cands, {EMPTY_ARR}) AS a_{i}"
             for ns, i in ns_i.items()
         ],
     )
 
-    def sz(ns: str) -> Column:
+    def sz(ns: str) -> str:
         """candidate count in ``ns`` (0 when unmapped)."""
-        return F.col(f"c_{ns_i[ns]}")
+        return f"c_{ns_i[ns]}"
 
-    def cands(ns: str) -> Column:
+    def cands(ns: str) -> str:
         """sorted candidate set in ``ns`` ([] when unmapped)."""
-        return F.col(f"a_{ns_i[ns]}")
+        return f"a_{ns_i[ns]}"
 
-    def _mcase(fn) -> Column:
-        """when(mlabel == t, fn(otype)) ladder (pre-rename twin of
-        `_label_case`)."""
-        out = None
-        for tname, otype in types.items():
-            b = F.when(F.col("mlabel") == tname, fn(otype))
-            out = b if out is None else out.when(
-                F.col("mlabel") == tname, fn(otype)
-            )
-        return out
+    def mcase(fn) -> str:
+        return _label_case(types, "mlabel", fn)
 
-    ldefault = _mcase(lambda o: F.lit(o.default))
-
-    def _sum(exprs: list[Column]) -> Column:
-        out = exprs[0]
-        for e in exprs[1:]:
-            out = out + e
-        return out
-
+    ldefault = mcase(lambda o: q(o.default))
     # n_hits counts distance-1 neighbours in the MENTION's type's
     # namespaces only (per-type "No results found" semantics)
-    n_hits = _mcase(lambda o: _sum([sz(ns) for ns in o.choices]))
-    cand_default_raw = _mcase(lambda o: cands(o.default))
+    n_hits = mcase(lambda o: " + ".join(sz(ns) for ns in o.choices))
+    cand_default_raw = mcase(lambda o: cands(o.default))
+
     # non-default, non-own candidates of the row's type (sorted set —
     # each per-ns set is sorted, the flatten is re-sorted after dedup)
-    alias_collected = _mcase(
-        lambda o: F.sort_array(
-            F.array_distinct(
-                F.flatten(
-                    F.array(
-                        *(
-                            [
-                                F.when(F.col("ns") != ns_c, cands(ns_c)).otherwise(_EMPTY)
-                                for ns_c in o.choices
-                                if ns_c != o.default
-                            ]
-                            or [_EMPTY]
-                        )
-                    )
-                )
-            )
-        )
-    )
+    def _aliases(o: OntologyType) -> str:
+        parts = [
+            f"CASE WHEN ns != {q(ns_c)} THEN {cands(ns_c)} ELSE {EMPTY_ARR} END"
+            for ns_c in o.non_default
+        ] or [EMPTY_ARR]
+        return f"sort_array(array_distinct(flatten(array({', '.join(parts)}))))"
+
+    alias_collected = mcase(_aliases)
 
     # own-namespace override (the reference maps a mention's own
     # namespace to [raw_id] itself, replacing any same-ns xrefs):
@@ -223,51 +196,42 @@ def link_mentions_multi(
     #    default namespace, else the collected default-ns set;
     #  - aliases: collected non-default/non-own candidates, plus
     #    raw_id when the mention's own namespace is non-default.
-    own_is_default = F.col("ns") == ldefault
-    default_arr = F.when(own_is_default, F.array(F.col("raw_id"))).otherwise(
-        cand_default_raw
+    own_is_default = f"(ns = {ldefault})"
+    default_arr = (
+        f"CASE WHEN {own_is_default} THEN array(raw_id) ELSE {cand_default_raw} END"
     )
-    alias_arr = F.when(own_is_default, alias_collected).otherwise(
-        F.array_union(alias_collected, F.array(F.col("raw_id")))
+    alias_arr = (
+        f"CASE WHEN {own_is_default} THEN {alias_collected} "
+        f"ELSE array_union({alias_collected}, array(raw_id)) END"
     )
 
     # routing predicates: a candidate count in any non-own namespace
     # of the row's type > 1
-    multi_default = ~own_is_default & (_mcase(lambda o: sz(o.default)) > 1)
-
-    def _greatest(exprs: list[Column]) -> Column:
-        return exprs[0] if len(exprs) == 1 else F.greatest(*exprs)
-
-    any_multi = (
-        _mcase(
-            lambda o: _greatest(
-                [
-                    F.when(F.col("ns") == ns, F.lit(0)).otherwise(sz(ns))
-                    for ns in o.choices
-                ]
-            )
-        )
-        > 1
+    multi_default = (
+        f"(NOT {own_is_default}) AND {mcase(lambda o: sz(o.default))} > 1"
     )
+
+    def _greatest(o: OntologyType) -> str:
+        parts = [f"CASE WHEN ns = {q(ns)} THEN 0 ELSE {sz(ns)} END" for ns in o.choices]
+        return parts[0] if len(parts) == 1 else f"greatest({', '.join(parts)})"
+
+    any_multi = f"{mcase(_greatest)} > 1"
     # reason: format failures first (they never routed), then the
     # routing ladder — identical precedence to the round-5 two-branch
     # form, where invalid rows bypassed routing entirely
     route_reason = (
-        F.when(n_hits == 0, F.lit(R_NO_RESULTS))
-        .when(multi_default, F.lit(R_MULTI))
-        .when(
-            F.lit(strategy == Strategy.UNIQUE) & any_multi,
-            F.lit(R_UNIQUE_MULTI),
-        )
+        f"CASE WHEN {n_hits} = 0 THEN {q(R_NO_RESULTS)} "
+        f"WHEN {multi_default} THEN {q(R_MULTI)} "
+        f"WHEN {unique} AND ({any_multi}) THEN {q(R_UNIQUE_MULTI)} END"
     )
-    wide = joined.select(
+    wide = joined.selectExpr(
         "idx",
         "raw_id",
         "ns",
-        F.col("mlabel").alias("label"),
-        F.coalesce(F.col("format_reason"), route_reason).alias("reason"),
-        default_arr.alias("cand_default"),
-        alias_arr.alias("aliases"),
+        "mlabel AS label",
+        f"coalesce(format_reason, {route_reason}) AS reason",
+        f"{default_arr} AS cand_default",
+        f"{alias_arr} AS aliases",
     )
 
     # ---- records: first input row per (label, id) --------------------
@@ -279,31 +243,19 @@ def link_mentions_multi(
     # aggregate expressions are prunable — a consumer that only reads
     # r_label/r_xrefs (the lazy triples pipeline after its projection)
     # aggregates 2 strings instead of 9.
-    records = df.groupBy(F.col("label").alias("r_key_label"), "id").agg(
-        *[
-            F.min_by(
-                F.coalesce(F.col(c), F.lit("")), F.col("idx")
-            ).alias(f"r_{c}")
-            for c in _RECORD_COLS
-        ]
+    records = df.groupBy(F.expr("label AS r_key_label"), "id").agg(
+        *[F.expr(f"min_by(coalesce({c}, ''), idx) AS r_{c}") for c in _RECORD_COLS]
     )
 
     # ---- ONE records join + ONE metadata join for every row ----------
     rows = wide.join(
-        records,
-        (wide.raw_id == records.r_id) & (wide.label == records.r_key_label),
-        "left",
+        records, F.expr("raw_id = r_id AND label = r_key_label"), "left"
     )
-    is_conv = F.col("reason").isNull()
+    is_conv = "reason IS NULL"
     rows = rows.withColumn(
         "canonical",
-        F.when(F.size("cand_default") == 1, F.element_at("cand_default", 1)),
+        F.expr("CASE WHEN size(cand_default) = 1 THEN element_at(cand_default, 1) END"),
     )
-    from ontology_matcher_spark.operators.format_stage import (
-        metadata_exprs,
-        metadata_table,
-    )
-
     # metadata key = canonical when resolved, else the RAW id: the
     # reference fetches metadata per QUERY and applies it even to rows
     # with no default mapping (format_by_metadata runs before the
@@ -312,68 +264,63 @@ def link_mentions_multi(
     # reason-gated output expressions never read them.
     rows = rows.join(
         F.broadcast(metadata_table(terms)),
-        F.when(is_conv, F.coalesce(rows.canonical, rows.raw_id))
-        == F.col("md_curie"),
+        F.expr(
+            f"CASE WHEN {is_conv} THEN coalesce(canonical, raw_id) END = md_curie"
+        ),
         "left",
     )
 
     # per-label metadata semantics: one expression per output column,
     # switching by metadata_mode (flat label test — no nesting)
     gene_labels = [t for t, o in types.items() if o.metadata_mode == "gene"]
-    dflt = metadata_exprs("default", F.col("aliases"))
-    gene = metadata_exprs("gene", F.col("aliases"))
+    dflt = metadata_exprs("default", "aliases")
+    gene = metadata_exprs("gene", "aliases")
+    is_gene = f"label IN ({', '.join(map(q, gene_labels))})"
 
-    def o(col: str) -> Column:
+    def o(col: str) -> str:
         if not gene_labels:
             return dflt[col]
-        return F.when(F.col("label").isin(gene_labels), gene[col]).otherwise(
-            dflt[col]
-        )
+        return f"CASE WHEN {is_gene} THEN {gene[col]} ELSE {dflt[col]} END"
 
-    resolved = is_conv & F.col("canonical").isNotNull()
-    rows = (
-        rows.withColumn("o_name", o("name"))
-        .withColumn("o_description", o("description"))
-        .withColumn("o_synonyms", o("synonyms"))
-        .withColumn("o_taxid", o("taxid"))
-        .withColumn("o_pmids", o("pmids"))
-        .withColumn("o_xrefs", o("xrefs"))
+    resolved = f"{is_conv} AND canonical IS NOT NULL"
+    rows = rows.withColumns(
+        {
+            f"o_{c}": F.expr(o(c))
+            for c in ("name", "description", "synonyms", "taxid", "pmids", "xrefs")
+        }
     )
 
-    default_of_label = _label_case(types, lambda o: F.lit(o.default))
-    rescue = (
-        F.substring_index("raw_id", ":", 1) == default_of_label
-    ) | F.lit(strategy == Strategy.MIXTURE)
+    default_of_label = _label_case(types, "label", lambda o: q(o.default))
+    rescue = f"(substring_index(raw_id, ':', 1) = {default_of_label} OR {mixture})"
+
+    def conv_or_raw(c: str) -> str:
+        return f"CASE WHEN {is_conv} THEN o_{c} ELSE r_{c} END AS {c}"
 
     # converted rows emit the metadata-formatted columns; rescued
     # failures emit the raw-record passthrough (identical to the
     # round-5 rescued branch — raw_id always "")
-    formatted = rows.where(is_conv | rescue).select(
-        F.when(resolved, F.col("canonical")).otherwise(F.col("raw_id")).alias("id"),
-        F.when(is_conv, F.col("o_name")).otherwise(F.col("r_name")).alias("name"),
-        F.when(resolved, F.col("label")).otherwise(F.col("r_label")).alias("label"),
-        F.col("r_resource").alias("resource"),
-        F.when(is_conv, F.col("o_description"))
-        .otherwise(F.col("r_description"))
-        .alias("description"),
-        F.when(is_conv, F.col("o_synonyms"))
-        .otherwise(F.col("r_synonyms"))
-        .alias("synonyms"),
-        F.when(is_conv, F.col("o_pmids")).otherwise(F.col("r_pmids")).alias("pmids"),
-        F.when(is_conv, F.col("o_taxid")).otherwise(F.col("r_taxid")).alias("taxid"),
-        F.when(is_conv, F.col("o_xrefs")).otherwise(F.col("r_xrefs")).alias("xrefs"),
-        F.when(resolved, F.col("raw_id")).otherwise(F.lit("")).alias("raw_id"),
+    formatted = rows.where(F.expr(f"{is_conv} OR {rescue}")).selectExpr(
+        f"CASE WHEN {resolved} THEN canonical ELSE raw_id END AS id",
+        conv_or_raw("name"),
+        f"CASE WHEN {resolved} THEN label ELSE r_label END AS label",
+        "r_resource AS resource",
+        conv_or_raw("description"),
+        conv_or_raw("synonyms"),
+        conv_or_raw("pmids"),
+        conv_or_raw("taxid"),
+        conv_or_raw("xrefs"),
+        f"CASE WHEN {resolved} THEN raw_id ELSE '' END AS raw_id",
     )
-    failed_formatted = rows.where(~is_conv & ~rescue).select(
-        F.col("raw_id").alias("id"),
-        F.col("r_name").alias("name"),
+    failed_formatted = rows.where(F.expr(f"(NOT ({is_conv})) AND (NOT {rescue})")).selectExpr(
+        "raw_id AS id",
+        "r_name AS name",
         "label",
-        F.col("r_resource").alias("resource"),
-        F.col("r_description").alias("description"),
-        F.col("r_synonyms").alias("synonyms"),
-        F.col("r_pmids").alias("pmids"),
-        F.col("r_taxid").alias("taxid"),
-        F.col("r_xrefs").alias("xrefs"),
+        "r_resource AS resource",
+        "r_description AS description",
+        "r_synonyms AS synonyms",
+        "r_pmids AS pmids",
+        "r_taxid AS taxid",
+        "r_xrefs AS xrefs",
         "reason",
     )
     return formatted, failed_formatted

@@ -326,6 +326,58 @@ def _scan_text(
     return out
 
 
+def _scan_batch(batch, d: dict):
+    """One Arrow batch of documents(doc_id, spans) → one batch of
+    mention rows (MENTION_SCHEMA columns)."""
+    import pyarrow as pa
+
+    doc_ids = batch.column(0).to_pylist()
+    spans = batch.column(1)  # ListArray<StructArray>
+    # raw offsets index into .values absolutely (correct for sliced
+    # arrays too). A NULL span list need not have an empty offset
+    # range, so NULL slots are skipped by the validity bitmap — read
+    # only when the batch has nulls.
+    off = spans.offsets.to_pylist()
+    valid = spans.is_valid().to_pylist() if spans.null_count else None
+    vals = spans.values
+    kinds = vals.field("kind").to_pylist()
+    texts = vals.field("text").to_pylist()
+    soffs = vals.field("offset").to_pylist()
+    c_doc: list[str] = []
+    c_si: list[int] = []
+    c_off: list[int] = []
+    c_surface: list[str] = []
+    c_id: list[str] = []
+    c_mt: list[str] = []
+    for i, did in enumerate(doc_ids):
+        if valid is not None and not valid[i]:
+            continue
+        base = off[i]
+        for j in range(base, off[i + 1]):
+            if kinds[j] != "text" or not texts[j]:
+                continue  # media spans pass through untouched
+            si = j - base
+            so = int(soffs[j])
+            for surface, curie, mtype in _scan_text(texts[j], d):
+                c_doc.append(did)
+                c_si.append(si)
+                c_off.append(so)
+                c_surface.append(surface)
+                c_id.append(curie)
+                c_mt.append(mtype)
+    return pa.RecordBatch.from_arrays(
+        [
+            pa.array(c_doc, pa.string()),
+            pa.array(c_si, pa.int32()),
+            pa.array(c_off, pa.int32()),
+            pa.array(c_surface, pa.string()),
+            pa.array(c_id, pa.string()),
+            pa.array(c_mt, pa.string()),
+        ],
+        names=["doc_id", "span_idx", "offset", "surface", "id", "match_type"],
+    )
+
+
 def detect_mentions(documents: DataFrame, dictionary) -> DataFrame:
     """documents(doc_id, spans[]) → mention rows (MENTION_SCHEMA).
 
@@ -339,64 +391,13 @@ def detect_mentions(documents: DataFrame, dictionary) -> DataFrame:
     artifact_path = dictionary if isinstance(dictionary, str) else None
 
     def run(batches):
-        import pyarrow as pa
-
         d = (
             load_detection_artifact(artifact_path)
             if artifact_path is not None
             else dictionary.value
         )
-        out_schema = pa.schema(
-            [
-                ("doc_id", pa.string()),
-                ("span_idx", pa.int32()),
-                ("offset", pa.int32()),
-                ("surface", pa.string()),
-                ("id", pa.string()),
-                ("match_type", pa.string()),
-            ]
-        )
         for batch in batches:  # pyarrow.RecordBatch
-            doc_ids = batch.column(0).to_pylist()
-            spans = batch.column(1)  # ListArray<StructArray>
-            # raw offsets index into .values absolutely (correct for
-            # sliced arrays too); a NULL span list has an empty range
-            off = spans.offsets.to_pylist()
-            vals = spans.values
-            kinds = vals.field("kind").to_pylist()
-            texts = vals.field("text").to_pylist()
-            soffs = vals.field("offset").to_pylist()
-            c_doc: list[str] = []
-            c_si: list[int] = []
-            c_off: list[int] = []
-            c_surface: list[str] = []
-            c_id: list[str] = []
-            c_mt: list[str] = []
-            for i, did in enumerate(doc_ids):
-                base = off[i]
-                for j in range(base, off[i + 1]):
-                    if kinds[j] != "text" or not texts[j]:
-                        continue  # media spans pass through untouched
-                    si = j - base
-                    so = int(soffs[j])
-                    for surface, curie, mtype in _scan_text(texts[j], d):
-                        c_doc.append(did)
-                        c_si.append(si)
-                        c_off.append(so)
-                        c_surface.append(surface)
-                        c_id.append(curie)
-                        c_mt.append(mtype)
-            yield pa.RecordBatch.from_arrays(
-                [
-                    pa.array(c_doc, pa.string()),
-                    pa.array(c_si, pa.int32()),
-                    pa.array(c_off, pa.int32()),
-                    pa.array(c_surface, pa.string()),
-                    pa.array(c_id, pa.string()),
-                    pa.array(c_mt, pa.string()),
-                ],
-                schema=out_schema,
-            )
+            yield _scan_batch(batch, d)
 
     # mapInArrow, not mapInPandas: the spans column is a list<struct>,
     # which the pandas path converts to a Python dict per span — at

@@ -37,7 +37,6 @@ from ontology_matcher_spark.ontology_types import (
     Strategy,
 )
 from ontology_matcher_spark.operators.candidates import generate_candidates
-from ontology_matcher_spark.operators.canonicalize import canonical_assignment
 from ontology_matcher_spark.operators.format_stage import format_output
 from ontology_matcher_spark.operators.validate import validate_mentions
 
@@ -65,70 +64,22 @@ def xref_pairs(formatted: DataFrame) -> DataFrame:
     ).where(F.col("src") != F.col("dst"))
 
 
-def build_triples(
-    formatted: DataFrame,
-    terms: DataFrame,
-    otype: OntologyType,
-    canon: DataFrame | None = None,
-) -> DataFrame:
-    """Stage 6+7: formatted output → (subj, pred, obj, label, src).
-
-    - mention → canonical-entity links (skos:exactMatch), canonical
-      chosen per xref-connected component (pass a shared ``canon``
-      node→canonical map to reuse ONE global CC across entity types —
-      see canonical_assignment_by_label);
-    - entity → xref member edges;
-    - term → parent is-a edges.
-    """
-    pairs = xref_pairs(formatted)
-    if canon is None:
-        canon = canonical_assignment(pairs, otype.default)  # node → canonical
-
-    mention_links = formatted.join(canon, formatted.id == canon.node, "left").select(
-        F.when(F.col("raw_id") != "", F.col("raw_id"))
-        .otherwise(F.col("id"))
-        .alias("subj"),
-        F.lit("skos:exactMatch").alias("pred"),
-        F.coalesce(F.col("canonical"), F.col("id")).alias("obj"),
-        F.lit(otype.type).alias("label"),
-        F.lit("linker").alias("src"),
-    )
-    xref_triples = pairs.select(
-        F.col("src").alias("subj"),
-        F.lit("xref").alias("pred"),
-        F.col("dst").alias("obj"),
-        F.lit(otype.type).alias("label"),
-        F.lit("linker").alias("src"),
-    )
-    isa_triples = terms.where(
-        (F.col("label") == otype.type) & (F.col("parent_curie") != "")
-    ).select(
-        F.col("curie").alias("subj"),
-        F.lit("is-a").alias("pred"),
-        F.col("parent_curie").alias("obj"),
-        F.lit(otype.type).alias("label"),
-        F.lit("dictionary").alias("src"),
-    )
-    # ONE distinct after the union (disjoint `pred` literals per
-    # branch ⇒ identical row set, 1 exchange instead of 3 — guide §2.4)
-    return (
-        mention_links.unionByName(xref_triples)
-        .unionByName(isa_triples)
-        .distinct()
-    )
-
-
 def build_triples_multi(
     formatted: DataFrame,
     terms: DataFrame,
     labels: list[str],
     canon: DataFrame,
 ) -> DataFrame:
-    """Stage 6+7 over a MIXED-label formatted table in one plan —
-    the single-pass counterpart of per-type build_triples (the mention
-    table and formatted output are each scanned once for all entity
-    types; at 10^12 docs the per-type loop's five scans are the
-    bottleneck, not the compute)."""
+    """Stage 6+7 over a MIXED-label formatted table in one plan: the
+    mention table and formatted output are each scanned once for all
+    entity types (at 10^12 docs a per-type loop's five scans are the
+    bottleneck, not the compute).
+
+    - mention → canonical-entity links (skos:exactMatch), canonical
+      from the shared node→canonical map ``canon``
+      (canonical_assignment_by_label);
+    - entity → xref member edges;
+    - term → parent is-a edges."""
     pairs = formatted.select(
         F.col("id").alias("src"),
         "label",

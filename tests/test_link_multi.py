@@ -38,3 +38,26 @@ def test_multi_equals_per_type_union(spark, fixture_dir, strategy):
     ]
     assert sorted(got_fmt_rows) == sorted(exp_fmt_rows)
     assert sorted(got_failed_rows) == sorted(exp_failed_rows)
+
+
+def test_plan_build_py4j_budget(spark, fixture_dir, monkeypatch):
+    """Building the five-type plan stays cheap on the driver: the label
+    ladders are SQL text, one F.expr/selectExpr per projection, so the
+    call makes O(projections) py4j round trips. Built Column node by
+    Column node (14-35 round trips each) it made about 20k."""
+    from py4j.clientserver import ClientServerConnection
+
+    read = lambda n: spark.read.parquet(os.path.join(fixture_dir, f"{n}.parquet"))  # noqa: E731
+    mentions, edges, terms = read("mentions"), read("xref_edges"), read("ontology_terms")
+    calls = 0
+    send = ClientServerConnection.send_command
+
+    def counted(self, *a, **k):
+        nonlocal calls
+        calls += 1
+        return send(self, *a, **k)
+
+    monkeypatch.setattr(ClientServerConnection, "send_command", counted)
+    link_mentions_multi(mentions, edges, terms, ONTOLOGY_TYPES, Strategy.UNIQUE)
+    monkeypatch.undo()
+    assert 0 < calls <= 2000, calls

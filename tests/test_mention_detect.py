@@ -203,3 +203,43 @@ def test_fixture_corpus_exercises_fuzzy_tier(spark, fixture_dir):
     }
     assert by_type.get("fuzzy", 0) > 0, by_type
     assert by_type.get("name", 0) > 0  # exact tiers still present
+
+
+def test_null_span_list_slot_skipped():
+    """A NULL span list is skipped by the validity bitmap even when its
+    offset range is non-empty (Arrow does not require empty ranges
+    under null slots)."""
+    import pyarrow as pa
+
+    from ontology_matcher_spark.operators.mention_detect import _scan_batch
+
+    d = build_dictionary(
+        [
+            {"curie": "MONDO:1", "name": "glioblastoma", "synonyms": []},
+            {"curie": "MONDO:2", "name": "melanoma", "synonyms": []},
+        ]
+    )
+    values = pa.StructArray.from_arrays(
+        [
+            pa.array(["text"] * 3),
+            pa.array(["glioblastoma", "melanoma", "glioblastoma"]),
+            pa.array([0, 0, 0], pa.int32()),
+        ],
+        names=["kind", "text", "offset"],
+    )
+    offsets = pa.array([0, 1, 2, 3], pa.int32())
+    masked = pa.ListArray.from_arrays(
+        offsets, values, mask=pa.array([False, True, False])
+    )
+    assert masked.null_count == 1
+    assert masked.offsets.to_pylist() == [0, 1, 2, 3]  # d2's range is [1, 2)
+    docs = pa.array(["d1", "d2", "d3"])
+
+    got = _scan_batch(pa.RecordBatch.from_arrays([docs, masked], ["doc_id", "spans"]), d)
+    assert sorted(zip(*(got.column(c).to_pylist() for c in ("doc_id", "id")))) == [
+        ("d1", "MONDO:1"), ("d3", "MONDO:1"),
+    ]
+    # without nulls the raw-offsets path scans every slot
+    full = pa.ListArray.from_arrays(offsets, values)
+    got = _scan_batch(pa.RecordBatch.from_arrays([docs, full], ["doc_id", "spans"]), d)
+    assert sorted(got.column("doc_id").to_pylist()) == ["d1", "d2", "d3"]
