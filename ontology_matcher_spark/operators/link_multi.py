@@ -298,11 +298,15 @@ def link_mentions_multi(
 
     # converted rows emit the metadata-formatted columns; rescued
     # failures emit the raw-record passthrough (identical to the
-    # round-5 rescued branch — raw_id always "")
+    # round-5 rescued branch — raw_id always ""). Every row keeps the
+    # mention's label: a converted row's record has that label anyway
+    # (records are keyed by (label, id)), and a rescued row whose
+    # record join misses (a NULL id) must still carry it, as the
+    # per-type format_output does.
     formatted = rows.where(F.expr(f"{is_conv} OR {rescue}")).selectExpr(
         f"CASE WHEN {resolved} THEN canonical ELSE raw_id END AS id",
         conv_or_raw("name"),
-        f"CASE WHEN {resolved} THEN label ELSE r_label END AS label",
+        "label",
         "r_resource AS resource",
         conv_or_raw("description"),
         conv_or_raw("synonyms"),

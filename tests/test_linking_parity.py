@@ -13,8 +13,13 @@ from pyspark.sql import functions as F
 
 from ontology_matcher_spark import oracle
 from ontology_matcher_spark.ontology_types import ONTOLOGY_TYPES, Strategy
+from ontology_matcher_spark.operators.link_multi import link_mentions_multi
 from ontology_matcher_spark.plans.pipeline import link_mentions
-from ontology_matcher_spark.schemas import FAILED_COLUMNS, FORMATTED_COLUMNS
+from ontology_matcher_spark.schemas import (
+    FAILED_COLUMNS,
+    FORMATTED_COLUMNS,
+    MENTIONS,
+)
 
 
 def _spark_rows(df, cols):
@@ -57,6 +62,36 @@ def test_formatted_parity(spark, bundle, fixture_dir, tname, strategy):
     assert _spark_rows(got_failed, FAILED_COLUMNS) == _oracle_rows(
         exp_failed, FAILED_COLUMNS
     )
+
+
+@pytest.mark.parametrize("tname", ["Gene", "Disease"])
+def test_multi_null_id_mention_parity(spark, bundle, fixture_dir, tname):
+    """A NULL-id mention under MIXTURE fails validation and is rescued;
+    no raw record joins to it, yet it keeps its type label, as in the
+    oracle. Both sides' NULLs read as '' (the oracle's own id is
+    None)."""
+    otype = ONTOLOGY_TYPES[tname]
+    null_row = {c: None for c in MENTIONS.fieldNames()} | {"label": tname}
+    mentions_py = [m for m in bundle.mentions if m["label"] == tname] + [null_row]
+    conv, failed = oracle.match(mentions_py, bundle.xref_edges, otype)
+    exp_fmt, exp_failed = oracle.format_output(
+        mentions_py, conv, failed, bundle.terms, otype
+    )
+
+    mentions = spark.createDataFrame(
+        [tuple(m[c] for c in MENTIONS.fieldNames()) for m in mentions_py], MENTIONS
+    )
+    got_fmt, got_failed = link_mentions_multi(
+        mentions,
+        _load(spark, fixture_dir, "xref_edges"),
+        _load(spark, fixture_dir, "ontology_terms"),
+        {tname: otype},
+        Strategy.MIXTURE,
+    )
+    got = sorted(tuple(r[c] or "" for c in FORMATTED_COLUMNS) for r in got_fmt.collect())
+    assert ("", "", tname, "", "", "", "", "", "", "") in got
+    assert got == _oracle_rows(exp_fmt, FORMATTED_COLUMNS)
+    assert got_failed.count() == 0 and exp_failed == []
 
 
 def test_edge_cases_present(bundle):
