@@ -57,6 +57,10 @@ def _label_case(types: dict[str, OntologyType], label: str, fn) -> str:
     return f"(CASE {whens} END)"
 
 
+def _isin(col: str, values) -> str:
+    return f"{col} IN ({', '.join(map(q, values))})"
+
+
 def link_mentions_multi(
     mentions: DataFrame,
     xref_edges: DataFrame,
@@ -82,29 +86,23 @@ def link_mentions_multi(
     if "idx" not in df.columns:
         df = df.withColumn("idx", F.monotonically_increasing_id())
     has_colon = "contains(id, ':')"
-    prefix_ok = _label_case(
-        types, "label", lambda o: f"ns IN ({', '.join(map(q, o.choices))})"
-    )
+    prefix_ok = _label_case(types, "label", lambda o: _isin("ns", o.choices))
     local_re = q(f"^{CURIE_LOCAL_PATTERN}$")
-    df = (
-        df.withColumn(
-            "ns",
-            F.expr(f"CASE WHEN {has_colon} THEN substring_index(id, ':', 1) ELSE '' END"),
-        )
-        .withColumn(
-            "local_id",
-            F.expr(
-                f"CASE WHEN {has_colon} THEN substring(id, instr(id, ':') + 1) ELSE '' END"
+    df = df.withColumns(
+        {
+            "ns": F.expr(
+                f"CASE WHEN {has_colon} THEN substring_index(id, ':', 1) ELSE '' END"
             ),
-        )
-        .withColumn(
-            "format_reason",
-            F.expr(
-                f"CASE WHEN id IS NULL OR (NOT {has_colon}) THEN {q(R_BAD_FORMAT)} "
-                f"WHEN NOT {prefix_ok} THEN {q(R_BAD_PREFIX)} "
-                f"WHEN NOT (local_id RLIKE {local_re}) THEN {q(R_BAD_FORMAT)} END"
+            "local_id": F.expr(
+                f"CASE WHEN {has_colon} THEN substring(id, instr(id, ':') + 1) "
+                "ELSE '' END"
             ),
-        )
+        }
+    )
+    format_reason = (
+        f"CASE WHEN id IS NULL OR (NOT {has_colon}) THEN {q(R_BAD_FORMAT)} "
+        f"WHEN NOT {prefix_ok} THEN {q(R_BAD_PREFIX)} "
+        f"WHEN NOT (local_id RLIKE {local_re}) THEN {q(R_BAD_FORMAT)} END"
     )
     # ---- pre-aggregated candidate map + ONE 1:1 broadcast join -------
     # The round-1 shape collected 22 per-namespace ARRAYS per mention
@@ -121,7 +119,7 @@ def link_mentions_multi(
     # dictionary is pre-distinct'd so counts equal the reference's
     # set sizes.
     edges = (
-        xref_edges.where(F.expr(f"dst_ns IN ({', '.join(map(q, all_ns))})"))
+        xref_edges.where(F.expr(_isin("dst_ns", all_ns)))
         .select("src_curie", "dst_ns", "dst_curie")
         .distinct()
     )
@@ -141,7 +139,9 @@ def link_mentions_multi(
     # twice). Invalid rows ride the same broadcast probe — their
     # routing columns are garbage gated off by format_reason, which
     # takes precedence in the reason coalesce below.
-    m = df.selectExpr("idx", "id AS raw_id", "ns", "label AS mlabel", "format_reason")
+    m = df.selectExpr(
+        "idx", "id AS raw_id", "ns", "label AS mlabel", f"{format_reason} AS format_reason"
+    )
     joined = m.join(F.broadcast(emap), F.expr("raw_id = src_curie"), "left")
 
     # flatten the map ONCE into per-ns (count, candidate-set) columns:
@@ -240,9 +240,9 @@ def link_mentions_multi(
     # over 10^12 mentions is itself a big agg. One min_by PER COLUMN
     # rather than one over a 9-column struct: idx is unique, so every
     # column independently picks the same winning row, and separate
-    # aggregate expressions are prunable — a consumer that only reads
-    # r_label/r_xrefs (the lazy triples pipeline after its projection)
-    # aggregates 2 strings instead of 9.
+    # aggregate expressions are prunable — a consumer that reads few
+    # output columns (the lazy triples pipeline after its projection)
+    # aggregates only the strings behind them.
     records = df.groupBy(F.expr("label AS r_key_label"), "id").agg(
         *[F.expr(f"min_by(coalesce({c}, ''), idx) AS r_{c}") for c in _RECORD_COLS]
     )
@@ -275,26 +275,20 @@ def link_mentions_multi(
     gene_labels = [t for t, o in types.items() if o.metadata_mode == "gene"]
     dflt = metadata_exprs("default", "aliases")
     gene = metadata_exprs("gene", "aliases")
-    is_gene = f"label IN ({', '.join(map(q, gene_labels))})"
 
     def o(col: str) -> str:
         if not gene_labels:
             return dflt[col]
+        is_gene = _isin("label", gene_labels)
         return f"CASE WHEN {is_gene} THEN {gene[col]} ELSE {dflt[col]} END"
 
     resolved = f"{is_conv} AND canonical IS NOT NULL"
-    rows = rows.withColumns(
-        {
-            f"o_{c}": F.expr(o(c))
-            for c in ("name", "description", "synonyms", "taxid", "pmids", "xrefs")
-        }
-    )
 
     default_of_label = _label_case(types, "label", lambda o: q(o.default))
     rescue = f"(substring_index(raw_id, ':', 1) = {default_of_label} OR {mixture})"
 
     def conv_or_raw(c: str) -> str:
-        return f"CASE WHEN {is_conv} THEN o_{c} ELSE r_{c} END AS {c}"
+        return f"CASE WHEN {is_conv} THEN {o(c)} ELSE r_{c} END AS {c}"
 
     # converted rows emit the metadata-formatted columns; rescued
     # failures emit the raw-record passthrough (identical to the
@@ -315,7 +309,8 @@ def link_mentions_multi(
         conv_or_raw("xrefs"),
         f"CASE WHEN {resolved} THEN raw_id ELSE '' END AS raw_id",
     )
-    failed_formatted = rows.where(F.expr(f"(NOT ({is_conv})) AND (NOT {rescue})")).selectExpr(
+    failed = F.expr(f"(NOT ({is_conv})) AND (NOT {rescue})")
+    failed_formatted = rows.where(failed).selectExpr(
         "raw_id AS id",
         "r_name AS name",
         "label",

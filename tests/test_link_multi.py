@@ -47,8 +47,10 @@ def test_plan_build_py4j_budget(spark, fixture_dir, monkeypatch):
     Column node (14-35 round trips each) it made about 20k."""
     from py4j.clientserver import ClientServerConnection
 
-    read = lambda n: spark.read.parquet(os.path.join(fixture_dir, f"{n}.parquet"))  # noqa: E731
-    mentions, edges, terms = read("mentions"), read("xref_edges"), read("ontology_terms")
+    mentions, edges, terms = (
+        spark.read.parquet(os.path.join(fixture_dir, f"{n}.parquet"))
+        for n in ("mentions", "xref_edges", "ontology_terms")
+    )
     calls = 0
     send = ClientServerConnection.send_command
 
