@@ -5,7 +5,7 @@ list utilities (SURVEY.md §2.4 A2-A4, §2.7). All JVM-side
 Each kernel has ONE implementation, as SQL text (``*_sql``): plan
 builders compose these into a single string per projection, because
 pyspark pays ~14 py4j round trips per ``F.col`` and ~35 per
-``F.when`` but only ~6 for a whole ``F.expr``. The Column functions
+``F.when`` but only ~3-6 for a whole ``F.expr``. The Column functions
 are thin ``F.expr`` wrappers for callers holding Columns.
 """
 
