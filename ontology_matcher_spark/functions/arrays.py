@@ -6,10 +6,12 @@ Each kernel has ONE implementation, as SQL text (``*_sql``): plan
 builders compose these into a single string per projection, because
 pyspark pays ~14 py4j round trips per ``F.col`` and ~35 per
 ``F.when`` but only ~3-6 for a whole ``F.expr``. The Column functions
-are thin ``F.expr`` wrappers for callers holding Columns.
+are thin ``F.expr`` wrappers taking a column name or ``F.col(name)``.
 """
 
 from __future__ import annotations
+
+import re
 
 from pyspark.sql import Column
 from pyspark.sql import functions as F
@@ -28,9 +30,22 @@ def q(s: str) -> str:
 _PIPE_RE = q(r"\|")  # split() takes a regex
 
 
+_COLUMN_REF = re.compile(r"[A-Za-z_]\w*(\.[A-Za-z_]\w*)*")
+
+
 def _sql(c: Column | str) -> str:
-    """A column name / SQL text as is; a Column as its SQL rendering."""
-    return c if isinstance(c, str) else c._jc.toString()
+    """A column name / SQL text as is; a Column must be a plain column
+    reference (``F.col("a")``, ``F.col("t.a")``): its rendering is
+    valid SQL only then (an alias renders as ``a AS b``, a quoted name
+    loses its backticks), so anything else is refused."""
+    if isinstance(c, str):
+        return c
+    text = c._jc.toString()
+    if not _COLUMN_REF.fullmatch(text):
+        raise TypeError(
+            f"expected a column name or F.col(name), got Column {text!r}"
+        )
+    return text
 
 
 def split_pipe_sql(c: str) -> str:

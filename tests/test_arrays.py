@@ -37,3 +37,13 @@ def test_column_wrappers_match_oracle(spark):
         assert r["sp"] == [p for p in (s or "").split("|") if p]
         assert r["jl"] == oracle.join_lst(arr)
         assert r["cu"] == oracle.concat(a or [], b or [])
+
+
+@pytest.mark.parametrize(
+    "make",
+    [lambda: F.lit("a|b"), lambda: F.col("a").alias("b"),
+     lambda: F.col("`x y`"), lambda: F.upper("a")],
+)
+def test_column_wrappers_refuse_non_references(spark, make):
+    with pytest.raises(TypeError, match="F.col"):
+        split_pipe(make())

@@ -8,11 +8,9 @@ BUILDS the plan must leave these files byte-identical.
 Usage:
     python tools/plan_dump.py --out DIR [--types Gene,Disease|all ...]
                               [--strategy Mixture Unique]
-                              [--fixtures DIR]
 Defaults: every combination of {Gene,Disease | all five types} ×
 {Mixture, Unique} over the committed fixtures/ corpus. To dump another
-checkout's plans, copy this script into it and run it there with
-``--fixtures`` pointing at the same corpus.
+checkout's plans, copy this script into that checkout and run it there.
 """
 
 from __future__ import annotations
@@ -24,13 +22,14 @@ import sys
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, REPO)
+FIXTURES = os.path.join(REPO, "fixtures")
 
 _EXPR_ID = re.compile(r"#\d+L?")
 
 
-def dump(df, fixture_dir: str) -> str:
+def dump(df) -> str:
     plan = df._jdf.queryExecution().optimizedPlan().toString()
-    return _EXPR_ID.sub("", plan).replace(fixture_dir, "<fixtures>")
+    return _EXPR_ID.sub("", plan).replace(FIXTURES, "<fixtures>")
 
 
 def main() -> int:
@@ -38,7 +37,6 @@ def main() -> int:
     ap.add_argument("--out", required=True)
     ap.add_argument("--types", nargs="+", default=["Gene,Disease", "all"])
     ap.add_argument("--strategy", nargs="+", default=["Mixture", "Unique"])
-    ap.add_argument("--fixtures", default=os.path.join(REPO, "fixtures"))
     args = ap.parse_args()
 
     from ontology_matcher_spark.ontology_types import ONTOLOGY_TYPES, Strategy
@@ -47,9 +45,8 @@ def main() -> int:
 
     spark = get_spark("plan-dump", master="local[2]", shuffle_partitions=4)
     spark.conf.set("spark.sql.debug.maxToStringFields", "10000")
-    fixture_dir = os.path.abspath(args.fixtures)
     read = lambda n: spark.read.parquet(  # noqa: E731
-        os.path.join(fixture_dir, f"{n}.parquet")
+        os.path.join(FIXTURES, f"{n}.parquet")
     )
     mentions, edges, terms = read("mentions"), read("xref_edges"), read("ontology_terms")
 
@@ -66,7 +63,7 @@ def main() -> int:
             for kind, df in (("formatted", formatted), ("failed", failed)):
                 path = os.path.join(args.out, f"{tag}_{s.lower()}_{kind}.txt")
                 with open(path, "w") as fh:
-                    fh.write(dump(df, fixture_dir))
+                    fh.write(dump(df))
                 print(path)
     spark.stop()
     return 0
