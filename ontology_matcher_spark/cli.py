@@ -75,25 +75,24 @@ def cmd_template(args) -> int:
 
 def cmd_ontology(args) -> int:
     from ontology_matcher_spark.operators.link_multi import link_mentions_multi
+    from ontology_matcher_spark.plans.pipeline import link_mentions
     from ontology_matcher_spark.sources.io import read_mentions, write_formatted
 
     spark = _get_spark(args)
     mentions = read_mentions(spark, args.input_file)
-    if args.ontology_type:
-        types = {args.ontology_type: ONTOLOGY_TYPES[args.ontology_type]}
-        # the reference's per-type command ignores the label column;
-        # we honor the declared type for every row of the file
-        from pyspark.sql import functions as F
-
-        mentions = mentions.withColumn("label", F.lit(args.ontology_type))
-    else:
-        types = ONTOLOGY_TYPES
     edges = spark.read.parquet(os.path.join(args.dictionary, "xref_edges.parquet"))
     terms = spark.read.parquet(
         os.path.join(args.dictionary, "ontology_terms.parquet")
     )
     strategy = Strategy(args.strategy)
-    formatted, failed = link_mentions_multi(mentions, edges, terms, types, strategy)
+    if args.ontology_type:
+        formatted, failed = link_mentions(
+            mentions, edges, terms, ONTOLOGY_TYPES[args.ontology_type], strategy
+        )
+    else:
+        formatted, failed = link_mentions_multi(
+            mentions, edges, terms, ONTOLOGY_TYPES, strategy
+        )
     write_formatted(
         formatted,
         failed,

@@ -1,37 +1,18 @@
-"""Stage 3+4 — candidate generation + tie-break routing.
+"""Stage 3+4 — per-type candidate generation + tie-break routing.
 
-Replaces the reference's per-batch OxO/MyGene HTTP lookups
-(/root/reference/ontology_matcher/disease/__init__.py:180-208,
-gene/__init__.py:197-256) with ONE broadcast hash join against the
-xref-edge dictionary, then reproduces the routing ladder of
-_format_response (disease/__init__.py:102-178 — SURVEY.md §2.8 rules
-1-4) as a codegen'd when-ladder over per-namespace candidate-set
-sizes.
-
-Scale notes:
-- the dictionary is 10^5-10^7 rows → `F.broadcast` (no shuffle of the
-  10^12-row mention side);
-- the groupBy(idx) aggregation is keyed by the mention primary key, so
-  it is perfectly distributed (no hot keys possible: idx is unique);
-  hub entities fan out at most ~10^2 candidate rows per mention before
-  re-collapsing — AQE skew-join splitting covers pathological hubs;
-- per-namespace arrays are built in a single aggregate with
-  conditional collect_set (NOT `pivot`, which would add a distinct-
-  values job + a second shuffle).
+One ontology type's view of the linking stage ``link_multi._route``:
+the xref dictionary pre-aggregated per source curie, one broadcast
+map-join against the mentions, and the routing ladder of the
+reference's _format_response (disease/__init__.py:102-178 — SURVEY.md
+§2.8 rules 1-4).
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
 
 from ontology_matcher_spark.ontology_types import OntologyType, Strategy
-from ontology_matcher_spark.oracle import R_MULTI, R_NO_RESULTS, R_UNIQUE_MULTI
-
-#: candidate-array columns are positional (`cand_0`...) because
-#: namespace names like "ICD-9" are hostile column names.
-def cand_col(otype: OntologyType, ns: str) -> str:
-    return f"cand_{otype.choices.index(ns)}"
+from ontology_matcher_spark.operators.link_multi import _route, single_type
 
 
 def generate_candidates(
@@ -40,83 +21,7 @@ def generate_candidates(
     otype: OntologyType,
     strategy: Strategy = Strategy.MIXTURE,
 ) -> DataFrame:
-    """(idx, id, ns) × xref dictionary → wide candidate rows.
-
-    Output: idx, raw_id, ns, cand_0..cand_k (sorted array<string> per
-    namespace; the mention's own namespace holds [raw_id] — the
-    reference sets converted_id_dict[prefix] = id and never consults
-    own-namespace xrefs, disease/__init__.py:131-135), n_hits, reason
-    (NULL = converted).
-    """
-    choices = list(otype.choices)
-    m = valid_mentions.select("idx", F.col("id").alias("raw_id"), "ns")
-    edges = xref_edges.where(F.col("dst_ns").isin(choices)).select(
-        "src_curie", "dst_ns", "dst_curie"
-    )
-    # pre-aggregate the DICTIONARY side (ontology-bounded: one row per
-    # source curie), then ONE 1:1 broadcast join against the mention
-    # scan — the round-5 shape joined the edge list row-per-edge and
-    # re-aggregated per mention, which shuffled |mentions| × edge
-    # multiplicity rows into a |mentions|-group collect_set aggregation
-    # (the widest exchange of this operator; at 10^12 mentions it is
-    # corpus-bounded). n_hits stays the JOIN-ROW count (edge-list
-    # multiset semantics, own namespace included — the reference's
-    # "No results found" is an empty mappingResponseList,
-    # disease/__init__.py:123-126).
-    eagg = edges.groupBy("src_curie").agg(
-        F.count("dst_curie").alias("__n_hits"),
-        *[
-            F.sort_array(
-                F.collect_set(
-                    F.when(F.col("dst_ns") == ns, F.col("dst_curie"))
-                )
-            ).alias(f"__e_{otype.choices.index(ns)}")
-            for ns in choices
-        ],
-    )
-    _EMPTY = F.array().cast("array<string>")
-    wide = m.join(
-        F.broadcast(eagg), m.raw_id == eagg.src_curie, "left"
-    ).select(
-        "idx",
-        "raw_id",
-        "ns",
-        F.coalesce("__n_hits", F.lit(0)).alias("n_hits"),
-        *[
-            F.coalesce(f"__e_{otype.choices.index(ns)}", _EMPTY).alias(
-                cand_col(otype, ns)
-            )
-            for ns in choices
-        ],
-    )
-
-    # own-namespace column := [raw_id]
-    for ns in choices:
-        c = cand_col(otype, ns)
-        wide = wide.withColumn(
-            c,
-            F.when(F.col("ns") == ns, F.array(F.col("raw_id"))).otherwise(F.col(c)),
-        )
-
-    default_c = cand_col(otype, otype.default)
-    multi_default = (F.col("ns") != otype.default) & (F.size(default_c) > 1)
-    # any non-own namespace with >1 candidates (UNIQUE strategy kill)
-    any_multi = (
-        F.greatest(
-            *[
-                F.when(F.col("ns") == ns, F.lit(0)).otherwise(
-                    F.size(cand_col(otype, ns))
-                )
-                for ns in choices
-            ]
-        )
-        > 1
-    )
-    reason = (
-        F.when(F.col("n_hits") == 0, F.lit(R_NO_RESULTS))
-        .when(multi_default, F.lit(R_MULTI))
-        .when(
-            F.lit(strategy == Strategy.UNIQUE) & any_multi, F.lit(R_UNIQUE_MULTI)
-        )
-    )
-    return wide.withColumn("reason", reason)
+    """``validate_mentions`` rows × xref dictionary → idx, raw_id, ns,
+    label, reason (NULL = converted), cand_default, aliases."""
+    pinned, types = single_type(valid_mentions, otype)
+    return _route(pinned, xref_edges, types, strategy)

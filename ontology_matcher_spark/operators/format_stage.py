@@ -1,32 +1,23 @@
-"""Stage 5 — metadata enrichment + output formatting.
+"""Stage 5 — metadata enrichment expressions.
 
-Column-expression reproduction of the reference's default_format
-(/root/reference/ontology_matcher/ontology_formatter.py:675-771 —
-SURVEY.md §2.8 rules 5-7):
+Column-expression reproduction of the reference's metadata precedence
+(default_format_by_metadata, ontology_formatter.py:656-673 — SURVEY.md
+§2.8 rules 5-7), shared by every entity type's branch of
+``link_multi._format``:
 
-- raw-record join: every converted/failed id joins back to the FIRST
-  input row bearing that raw id (get_raw_record first-row-wins,
-  of.py:604-605 → row_number over idx);
-- metadata precedence: dictionary metadata beats the input row for
-  name/description (`or`-fallback), synonyms union
-  (default_format_by_metadata, of.py:656-673);
-- routing: default-id missing → keep raw id; unique → canonical id,
-  resource stays the RAW record's resource (of.py:734), label forced
-  to the ontology type (of.py:735); failed ids rescued iff
-  prefix == default OR strategy MIXTURE (of.py:754-763);
+- dictionary metadata beats the input row for name/description
+  (`or`-fallback), synonyms union;
 - xrefs = alias ids (all non-default namespace candidates, own
   namespace included — get_alias_ids, of.py:625-641) ∪ input xrefs,
   pipe-joined sorted-dedup (join_lst, of.py:544-553).
 
-Scale notes: the raw-record join shuffles on raw_id (mention-key
-cardinality, uniform); the metadata join broadcasts the term table.
-Everything is codegen'd — no Python.
+The metadata join broadcasts the term table. Everything is codegen'd
+SQL text — no Python.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window
-from pyspark.sql import functions as F
+from pyspark.sql import DataFrame
 
 from ontology_matcher_spark.functions.arrays import (
     EMPTY_ARR,
@@ -34,14 +25,6 @@ from ontology_matcher_spark.functions.arrays import (
     join_lst_sql,
     split_pipe_sql,
 )
-from ontology_matcher_spark.ontology_types import OntologyType, Strategy
-from ontology_matcher_spark.operators.candidates import cand_col
-from ontology_matcher_spark.schemas import FAILED_COLUMNS, FORMATTED_COLUMNS
-
-_RECORD_COLS = [
-    "id", "name", "label", "resource", "description",
-    "synonyms", "pmids", "taxid", "xrefs",
-]
 
 
 def metadata_table(terms: DataFrame) -> DataFrame:
@@ -118,107 +101,3 @@ def metadata_exprs(mode: str, alias_arr: str) -> dict[str, str]:
         "xrefs": xrefs,
         "pmids": pmids,
     }
-
-
-def first_records(mentions_idx: DataFrame) -> DataFrame:
-    """raw_id → first input row (all columns r_-prefixed)."""
-    w = Window.partitionBy("id").orderBy("idx")
-    return (
-        mentions_idx.withColumn("__rn", F.row_number().over(w))
-        .where(F.col("__rn") == 1)
-        .select(
-            *[
-                F.coalesce(F.col(c), F.lit("")).alias(f"r_{c}")
-                for c in _RECORD_COLS
-            ]
-        )
-    )
-
-
-def format_output(
-    candidates_wide: DataFrame,
-    mentions_idx: DataFrame,
-    terms: DataFrame,
-    otype: OntologyType,
-    strategy: Strategy = Strategy.MIXTURE,
-) -> tuple[DataFrame, DataFrame]:
-    """→ (formatted, failed_formatted), both all-string DataFrames with
-    FORMATTED_COLUMNS / FAILED_COLUMNS."""
-    records = first_records(mentions_idx)
-    default_c = cand_col(otype, otype.default)
-    non_default_cols = [
-        cand_col(otype, ns) for ns in otype.choices if ns != otype.default
-    ]
-
-    converted = candidates_wide.where(F.col("reason").isNull())
-    conv = converted.join(
-        records, converted.raw_id == records.r_id, "left"
-    )
-
-    canonical = F.when(
-        F.size(default_c) == 1, F.element_at(F.col(default_c), 1)
-    )
-    conv = conv.withColumn("canonical", canonical)
-
-    # metadata key = canonical when resolved, else the RAW id (the
-    # reference applies query-keyed metadata even to unresolved rows —
-    # ontology_formatter.py:697-700 before the id-None branch)
-    conv = conv.join(
-        F.broadcast(metadata_table(terms)),
-        F.coalesce(conv.canonical, conv.raw_id) == F.col("md_curie"),
-        "left",
-    )
-
-    # candidate arrays never hold NULLs (collect_set) — array_remove
-    # keeps this codegen'd, no lambda HOF
-    alias_arr = (
-        f"array_distinct(array_remove(concat({', '.join(non_default_cols)}), ''))"
-    )
-    o = metadata_exprs(otype.metadata_mode, alias_arr)
-    conv = conv.withColumns({f"o_{c}": F.expr(e) for c, e in o.items()})
-
-    resolved = F.col("canonical").isNotNull()
-    formatted_conv = conv.select(
-        F.when(resolved, F.col("canonical")).otherwise(F.col("raw_id")).alias("id"),
-        F.col("o_name").alias("name"),
-        F.when(resolved, F.lit(otype.type)).otherwise(F.col("r_label")).alias("label"),
-        F.col("r_resource").alias("resource"),
-        F.col("o_description").alias("description"),
-        F.col("o_synonyms").alias("synonyms"),
-        F.col("o_pmids").alias("pmids"),
-        F.col("o_taxid").alias("taxid"),
-        F.col("o_xrefs").alias("xrefs"),
-        F.when(resolved, F.col("raw_id")).otherwise(F.lit("")).alias("raw_id"),
-    )
-
-    # ---- failed side: match-phase failures + invalid CURIEs ----------
-    failures = candidates_wide.where(F.col("reason").isNotNull()).select(
-        F.col("raw_id").alias("fid"), "reason"
-    )
-    invalid = mentions_idx.where(F.col("format_reason").isNotNull()).select(
-        F.col("id").alias("fid"), F.col("format_reason").alias("reason")
-    )
-    failed_all = failures.unionByName(invalid)
-    f = failed_all.join(records, failed_all.fid == records.r_id, "left")
-    f = f.select(
-        F.col("fid").alias("id"),
-        F.col("r_name").alias("name"),
-        F.lit(otype.type).alias("label"),
-        F.col("r_resource").alias("resource"),
-        F.col("r_description").alias("description"),
-        F.col("r_synonyms").alias("synonyms"),
-        F.col("r_pmids").alias("pmids"),
-        F.col("r_taxid").alias("taxid"),
-        F.col("r_xrefs").alias("xrefs"),
-        "reason",
-        F.substring_index("fid", ":", 1).alias("__prefix"),
-    )
-    rescue = (F.col("__prefix") == otype.default) | F.lit(
-        strategy == Strategy.MIXTURE
-    )
-    rescued = f.where(rescue).withColumn("raw_id", F.lit("")).select(
-        *FORMATTED_COLUMNS
-    )
-    failed_formatted = f.where(~rescue).select(*FAILED_COLUMNS)
-    formatted = formatted_conv.select(*FORMATTED_COLUMNS).unionByName(rescued)
-    return formatted, failed_formatted

@@ -1,12 +1,8 @@
-"""Single-pass multi-type linking.
+"""Linking: mention CURIE → routed canonical id → formatted row.
 
-`link_mentions` (candidates.py + format_stage.py) runs one plan per
-entity type — faithful to the reference's one-file-per-type CLI, but
-five plans mean five scans of the mention table, five codegen
-compiles, and five job submissions. At 10^12 documents the mention
-table is the big input; it must be scanned ONCE.
-
-This operator links a mixed-label mention table in one dataflow:
+The one linking implementation, for any set of entity types. A mixed-
+label mention table is linked in one dataflow, so the mention table —
+the big input at 10^12 documents — is scanned ONCE:
 - the xref dictionary is pre-aggregated ONCE into a per-source-curie
   map ns → (count, sorted candidate set) — ontology-bounded work,
 - one 1:1 broadcast map-join against the mention scan (the mention
@@ -15,8 +11,14 @@ This operator links a mixed-label mention table in one dataflow:
   map-lookup columns (when ladders over the handful of types —
   constant-folded per row).
 
-Semantics are EXACTLY the per-type pipeline's: the parity test
-asserts multi(union) == ∪_t per_type(t) row-for-row.
+It runs in three stages — ``_validate`` (label-keyed CURIE check),
+``_route`` (candidate map + routing ladder) and ``_format`` (raw
+records, metadata, output routing). The per-type entry points
+(``validate_mentions``, ``generate_candidates``, ``link_mentions``)
+run the same stages with ``types={otype.type: otype}`` and every
+mention's label pinned to ``otype.type`` (``single_type``); the
+pinned label constant-folds every ladder to that type's branch. The
+parity tests hold every path against the pure-Python oracle.
 """
 
 from __future__ import annotations
@@ -61,27 +63,25 @@ def _isin(col: str, values) -> str:
     return f"{col} IN ({', '.join(map(q, values))})"
 
 
-def link_mentions_multi(
-    mentions: DataFrame,
-    xref_edges: DataFrame,
-    terms: DataFrame,
-    types: dict[str, OntologyType],
-    strategy: Strategy = Strategy.MIXTURE,
-) -> tuple[DataFrame, DataFrame]:
-    """Mixed-label mention table → (formatted, failed_formatted) in one
-    dataflow pass. Output equals the union of per-type link_mentions
-    runs restricted to each label.
+def single_type(
+    mentions: DataFrame, otype: OntologyType
+) -> tuple[DataFrame, dict[str, OntologyType]]:
+    """(mentions with every label pinned to ``otype.type``, the
+    one-type ``types`` map): the per-type entry points' arguments for
+    the stages below. The reference's per-type command ignores the
+    label column; pinning it honors the declared type for every row."""
+    return mentions.withColumn("label", F.lit(otype.type)), {otype.type: otype}
 
-    Every label-conditional expression is composed as SQL text and
-    handed to the JVM in one ``F.expr``/``selectExpr`` per projection:
-    the Catalyst tree is the one the Column API would build, but the
-    driver pays a few py4j round trips per projection instead of
-    ~14-35 per Column node (~20k for five types)."""
-    all_ns: list[str] = sorted({ns for t in types.values() for ns in t.choices})
-    unique = "true" if strategy == Strategy.UNIQUE else "false"
-    mixture = "true" if strategy == Strategy.MIXTURE else "false"
 
-    # ---- validate (label-conditional CURIE check) --------------------
+def _validate(mentions: DataFrame, types: dict[str, OntologyType]) -> DataFrame:
+    """Add ``idx`` (when absent), ``ns``, ``local_id`` and
+    ``format_reason`` (NULL = a valid CURIE for the row's type).
+
+    The reference aborts the whole run on any malformed id
+    (ontology_formatter.py:279-303); a distributed pipeline must not —
+    each row is tagged with a failure reason and routed. ``idx`` is a
+    column, not an iteration order: ``monotonically_increasing_id``
+    preserves file order, which is all first-row-wins needs."""
     df = mentions
     if "idx" not in df.columns:
         df = df.withColumn("idx", F.monotonically_increasing_id())
@@ -99,11 +99,30 @@ def link_mentions_multi(
             ),
         }
     )
-    format_reason = (
-        f"CASE WHEN id IS NULL OR (NOT {has_colon}) THEN {q(R_BAD_FORMAT)} "
-        f"WHEN NOT {prefix_ok} THEN {q(R_BAD_PREFIX)} "
-        f"WHEN NOT (local_id RLIKE {local_re}) THEN {q(R_BAD_FORMAT)} END"
+    return df.withColumn(
+        "format_reason",
+        F.expr(
+            f"CASE WHEN id IS NULL OR (NOT {has_colon}) THEN {q(R_BAD_FORMAT)} "
+            f"WHEN NOT {prefix_ok} THEN {q(R_BAD_PREFIX)} "
+            f"WHEN NOT (local_id RLIKE {local_re}) THEN {q(R_BAD_FORMAT)} END"
+        ),
     )
+
+
+def _route(
+    validated: DataFrame,
+    xref_edges: DataFrame,
+    types: dict[str, OntologyType],
+    strategy: Strategy,
+) -> DataFrame:
+    """``_validate`` output × xref dictionary → one row per mention:
+    idx, raw_id, ns, label, reason (NULL = converted; a format failure
+    takes precedence over the routing ladder), cand_default (sorted
+    default-namespace candidates; [raw_id] in the own namespace) and
+    aliases (sorted non-default candidates, own id included)."""
+    all_ns: list[str] = sorted({ns for t in types.values() for ns in t.choices})
+    unique = "true" if strategy == Strategy.UNIQUE else "false"
+
     # ---- pre-aggregated candidate map + ONE 1:1 broadcast join -------
     # The round-1 shape collected 22 per-namespace ARRAYS per mention
     # (allocation/GC storm); rounds 2-4 joined mentions against the
@@ -139,8 +158,8 @@ def link_mentions_multi(
     # twice). Invalid rows ride the same broadcast probe — their
     # routing columns are garbage gated off by format_reason, which
     # takes precedence in the reason coalesce below.
-    m = df.selectExpr(
-        "idx", "id AS raw_id", "ns", "label AS mlabel", f"{format_reason} AS format_reason"
+    m = validated.selectExpr(
+        "idx", "id AS raw_id", "ns", "label AS mlabel", "format_reason"
     )
     joined = m.join(F.broadcast(emap), F.expr("raw_id = src_curie"), "left")
 
@@ -224,7 +243,7 @@ def link_mentions_multi(
         f"WHEN {multi_default} THEN {q(R_MULTI)} "
         f"WHEN {unique} AND ({any_multi}) THEN {q(R_UNIQUE_MULTI)} END"
     )
-    wide = joined.selectExpr(
+    return joined.selectExpr(
         "idx",
         "raw_id",
         "ns",
@@ -233,6 +252,19 @@ def link_mentions_multi(
         f"{default_arr} AS cand_default",
         f"{alias_arr} AS aliases",
     )
+
+
+def _format(
+    validated: DataFrame,
+    wide: DataFrame,
+    terms: DataFrame,
+    types: dict[str, OntologyType],
+    strategy: Strategy,
+) -> tuple[DataFrame, DataFrame]:
+    """``_route`` rows + raw records + metadata → (formatted,
+    failed_formatted), SURVEY.md §2.8 rules 5-7 (the reference's
+    default_format, ontology_formatter.py:675-771)."""
+    mixture = "true" if strategy == Strategy.MIXTURE else "false"
 
     # ---- records: first input row per (label, id) --------------------
     # min_by per column, not a row_number window: the agg combines
@@ -243,7 +275,7 @@ def link_mentions_multi(
     # aggregate expressions are prunable — a consumer that reads few
     # output columns (the lazy triples pipeline after its projection)
     # aggregates only the strings behind them.
-    records = df.groupBy(F.expr("label AS r_key_label"), "id").agg(
+    records = validated.groupBy(F.expr("label AS r_key_label"), "id").agg(
         *[F.expr(f"min_by(coalesce({c}, ''), idx) AS r_{c}") for c in _RECORD_COLS]
     )
 
@@ -284,6 +316,9 @@ def link_mentions_multi(
 
     resolved = f"{is_conv} AND canonical IS NOT NULL"
 
+    # failures are rescued into the formatted output iff their prefix
+    # is the type's default namespace OR the strategy is MIXTURE
+    # (ontology_formatter.py:754-763)
     default_of_label = _label_case(types, "label", lambda o: q(o.default))
     rescue = f"(substring_index(raw_id, ':', 1) = {default_of_label} OR {mixture})"
 
@@ -291,12 +326,11 @@ def link_mentions_multi(
         return f"CASE WHEN {is_conv} THEN {o(c)} ELSE r_{c} END AS {c}"
 
     # converted rows emit the metadata-formatted columns; rescued
-    # failures emit the raw-record passthrough (identical to the
-    # round-5 rescued branch — raw_id always ""). Every row keeps the
-    # mention's label: a converted row's record has that label anyway
-    # (records are keyed by (label, id)), and a rescued row whose
-    # record join misses (a NULL id) must still carry it, as the
-    # per-type format_output does.
+    # failures emit the raw-record passthrough (raw_id always ""). Every
+    # row keeps the mention's label: a converted row's record has that
+    # label anyway (records are keyed by (label, id)), and a rescued row
+    # whose record join misses (a NULL id) must still carry it, as the
+    # oracle's does.
     formatted = rows.where(F.expr(f"{is_conv} OR {rescue}")).selectExpr(
         f"CASE WHEN {resolved} THEN canonical ELSE raw_id END AS id",
         conv_or_raw("name"),
@@ -323,3 +357,23 @@ def link_mentions_multi(
         "reason",
     )
     return formatted, failed_formatted
+
+
+def link_mentions_multi(
+    mentions: DataFrame,
+    xref_edges: DataFrame,
+    terms: DataFrame,
+    types: dict[str, OntologyType],
+    strategy: Strategy = Strategy.MIXTURE,
+) -> tuple[DataFrame, DataFrame]:
+    """Mixed-label mention table → (formatted, failed_formatted) in one
+    dataflow pass; each row is linked under its label's type.
+
+    Every label-conditional expression is composed as SQL text and
+    handed to the JVM in one ``F.expr``/``selectExpr`` per projection:
+    the Catalyst tree is the one the Column API would build, but the
+    driver pays a few py4j round trips per projection instead of
+    ~14-35 per Column node (~20k for five types)."""
+    validated = _validate(mentions, types)
+    wide = _route(validated, xref_edges, types, strategy)
+    return _format(validated, wide, terms, types, strategy)

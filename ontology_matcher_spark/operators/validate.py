@@ -1,53 +1,21 @@
-"""Stage 2 — CURIE validation / normalization (SURVEY.md §2.2 P1-P3).
+"""Stage 2 — per-type CURIE validation (SURVEY.md §2.2 P1-P3).
 
-The reference aborts the whole run on any malformed id
-(/root/reference/ontology_matcher/ontology_formatter.py:279-303); a
-distributed pipeline must not — we tag each row with a failure reason
-and route it, keeping the reason strings stable for the failed
-side-channel.
-
-Everything here is a codegen'd column expression: rlike + split +
-when/otherwise; no shuffle, no Python.
+One ontology type's view of the linking stage ``link_multi._validate``:
+every row is checked against ``otype``'s namespaces and tagged with a
+failure reason, never raised — the reason strings stay stable for the
+failed side-channel.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
 
-from ontology_matcher_spark.ontology_types import CURIE_LOCAL_PATTERN, OntologyType
-from ontology_matcher_spark.oracle import R_BAD_FORMAT, R_BAD_PREFIX
-
-
-def with_row_index(df: DataFrame, col: str = "idx") -> DataFrame:
-    """Attach a stable per-row index column.
-
-    The reference's ``idx`` is an iteration order (forcing it
-    single-threaded — disease/__init__.py:229); ours is a *column*:
-    ``monotonically_increasing_id`` preserves file order within and
-    across ordered splits, which is all first-row-wins dedup needs.
-    """
-    return df.withColumn(col, F.monotonically_increasing_id())
+from ontology_matcher_spark.ontology_types import OntologyType
+from ontology_matcher_spark.operators.link_multi import _validate, single_type
 
 
 def validate_mentions(mentions: DataFrame, otype: OntologyType) -> DataFrame:
     """Add ``idx``, ``ns``, ``local_id`` and ``format_reason``
-    (NULL = valid CURIE for this ontology type)."""
-    df = mentions if "idx" in mentions.columns else with_row_index(mentions)
-    has_colon = F.col("id").contains(":")
-    ns = F.substring_index(F.col("id"), ":", 1)
-    local = F.expr("substring(id, instr(id, ':') + 1)")
-    choices = list(otype.choices)
-    return (
-        df.withColumn("ns", F.when(has_colon, ns).otherwise(F.lit("")))
-        .withColumn("local_id", F.when(has_colon, local).otherwise(F.lit("")))
-        .withColumn(
-            "format_reason",
-            F.when(F.col("id").isNull() | ~has_colon, F.lit(R_BAD_FORMAT))
-            .when(~F.col("ns").isin(choices), F.lit(R_BAD_PREFIX))
-            .when(
-                ~F.col("local_id").rlike(f"^{CURIE_LOCAL_PATTERN}$"),
-                F.lit(R_BAD_FORMAT),
-            ),
-        )
-    )
+    (NULL = valid CURIE for this ontology type); ``label`` becomes
+    ``otype.type``."""
+    return _validate(*single_type(mentions, otype))

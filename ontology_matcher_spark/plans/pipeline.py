@@ -36,9 +36,7 @@ from ontology_matcher_spark.ontology_types import (
     OntologyType,
     Strategy,
 )
-from ontology_matcher_spark.operators.candidates import generate_candidates
-from ontology_matcher_spark.operators.format_stage import format_output
-from ontology_matcher_spark.operators.validate import validate_mentions
+from ontology_matcher_spark.operators import link_multi
 
 
 def link_mentions(
@@ -48,12 +46,11 @@ def link_mentions(
     otype: OntologyType,
     strategy: Strategy = Strategy.MIXTURE,
 ) -> tuple[DataFrame, DataFrame]:
-    """Stages 2-5: mention table → (formatted, failed_formatted)."""
-    v = validate_mentions(mentions, otype)
-    cands = generate_candidates(
-        v.where(F.col("format_reason").isNull()), xref_edges, otype, strategy
-    )
-    return format_output(cands, v, terms, otype, strategy)
+    """Stages 2-5 for one ontology type: mention table → (formatted,
+    failed_formatted). Every row is linked as ``otype`` (its label is
+    pinned), by the same stages as the multi-type run."""
+    pinned, types = link_multi.single_type(mentions, otype)
+    return link_multi.link_mentions_multi(pinned, xref_edges, terms, types, strategy)
 
 
 def xref_pairs(formatted: DataFrame) -> DataFrame:
@@ -259,10 +256,8 @@ def build_pipeline_lazy(
     # times and its five concurrent jobs' serial tails capped scaling
     # efficiency at 0.19. formatted feeds BOTH the CC pass and the
     # triple build → one materialization.
-    from ontology_matcher_spark.operators.link_multi import link_mentions_multi
-
     mentions = mentions.where(F.col("label").isin(tnames))
-    formatted = link_mentions_multi(
+    formatted = link_multi.link_mentions_multi(
         mentions, edges, terms, sel_types, strategy
     )[0]
     # project BEFORE the materialize: the lazy path's only consumers
@@ -491,8 +486,6 @@ def run_pipeline(
         canonical_assignment_by_label,
     )
 
-    from ontology_matcher_spark.operators.link_multi import link_mentions_multi
-
     tnames = types or list(ONTOLOGY_TYPES)
     sel_types = {t: ONTOLOGY_TYPES[t] for t in tnames}
 
@@ -501,7 +494,7 @@ def run_pipeline(
     # consumers prune partitions on read
     formatted = run.materialize(
         "formatted",
-        lambda: link_mentions_multi(
+        lambda: link_multi.link_mentions_multi(
             mentions.where(F.col("label").isin(tnames)),
             edges,
             terms,

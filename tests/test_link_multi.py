@@ -1,43 +1,51 @@
-"""Single-pass multi-type linking must equal the union of per-type
-runs row-for-row (both strategies)."""
+"""Single-pass multi-type linking over the mixed-label fixture must
+equal the union over labels of the pure-Python oracle's per-type runs,
+row-for-row (both strategies)."""
 
 import os
 
 import pytest
-from pyspark.sql import functions as F
 
+from ontology_matcher_spark import oracle
 from ontology_matcher_spark.ontology_types import ONTOLOGY_TYPES, Strategy
 from ontology_matcher_spark.operators.link_multi import link_mentions_multi
-from ontology_matcher_spark.plans.pipeline import link_mentions
 from ontology_matcher_spark.schemas import FAILED_COLUMNS, FORMATTED_COLUMNS
 
 
-@pytest.mark.parametrize("strategy", [Strategy.MIXTURE, Strategy.UNIQUE])
-def test_multi_equals_per_type_union(spark, fixture_dir, strategy):
-    mentions = spark.read.parquet(os.path.join(fixture_dir, "mentions.parquet"))
-    edges = spark.read.parquet(os.path.join(fixture_dir, "xref_edges.parquet"))
-    terms = spark.read.parquet(os.path.join(fixture_dir, "ontology_terms.parquet"))
+def _spark_rows(df, cols):
+    return sorted(tuple(r[c] for c in cols) for r in df.collect())
 
+
+def _oracle_rows(rows, cols):
+    return sorted(tuple(r.get(c, "") or "" for c in cols) for r in rows)
+
+
+@pytest.mark.parametrize("strategy", [Strategy.MIXTURE, Strategy.UNIQUE])
+def test_multi_equals_per_type_union(spark, bundle, fixture_dir, strategy):
+    mentions, edges, terms = (
+        spark.read.parquet(os.path.join(fixture_dir, f"{n}.parquet"))
+        for n in ("mentions", "xref_edges", "ontology_terms")
+    )
     got_fmt, got_failed = link_mentions_multi(
         mentions, edges, terms, ONTOLOGY_TYPES, strategy
     )
 
-    exp_fmt_rows, exp_failed_rows = [], []
+    exp_fmt, exp_failed = [], []
     for tname, otype in ONTOLOGY_TYPES.items():
-        fmt, failed = link_mentions(
-            mentions.where(F.col("label") == tname), edges, terms, otype, strategy
+        mentions_py = [m for m in bundle.mentions if m["label"] == tname]
+        conv, failed = oracle.match(mentions_py, bundle.xref_edges, otype, strategy)
+        fmt, failed_fmt = oracle.format_output(
+            mentions_py, conv, failed, bundle.terms, otype, strategy
         )
-        exp_fmt_rows += [tuple(r[c] for c in FORMATTED_COLUMNS) for r in fmt.collect()]
-        exp_failed_rows += [
-            tuple(r[c] for c in FAILED_COLUMNS) for r in failed.collect()
-        ]
+        exp_fmt += fmt
+        exp_failed += failed_fmt
 
-    got_fmt_rows = [tuple(r[c] for c in FORMATTED_COLUMNS) for r in got_fmt.collect()]
-    got_failed_rows = [
-        tuple(r[c] for c in FAILED_COLUMNS) for r in got_failed.collect()
-    ]
-    assert sorted(got_fmt_rows) == sorted(exp_fmt_rows)
-    assert sorted(got_failed_rows) == sorted(exp_failed_rows)
+    assert _spark_rows(got_fmt, FORMATTED_COLUMNS) == _oracle_rows(
+        exp_fmt, FORMATTED_COLUMNS
+    )
+    assert _spark_rows(got_failed, FAILED_COLUMNS) == _oracle_rows(
+        exp_failed, FAILED_COLUMNS
+    )
 
 
 def test_plan_build_py4j_budget(spark, fixture_dir, monkeypatch):
