@@ -229,7 +229,9 @@ def canonical_assignment_by_label(
 ) -> DataFrame:
     """ONE global CC over a multi-type graph, then a per-label
     canonical pick: min member in the label's default namespace, else
-    min member. ``node_labels``: DataFrame(curie, label). Running CC
+    min member (explicit form of the reference's stubbed dedup merge,
+    cli.py:201-245). ``node_labels``: DataFrame(curie, label); an
+    unlabelled node has no default namespace. Running CC
     once for all entity types matters — each CC is a serial driver
     loop whose fixed per-round latency does not parallelize, so five
     per-type loops cost 5× the non-scalable time of one.
@@ -260,26 +262,3 @@ def canonical_assignment_by_label(
         ).alias("canonical")
     )
     return nodes.join(pick, "root").select("node", "canonical")
-
-
-def canonical_assignment(
-    edges: DataFrame,
-    default_ns: str,
-    src: str = "src",
-    dst: str = "dst",
-) -> DataFrame:
-    """node → canonical: the min default-namespace member of the node's
-    component, else the min member (explicit form of the reference's
-    stubbed dedup merge, cli.py:201-245)."""
-    cc = connected_components(edges, src=src, dst=dst)
-    pick = cc.groupBy("root").agg(
-        F.coalesce(
-            F.min(
-                F.when(
-                    F.col("node").startswith(default_ns + ":"), F.col("node")
-                )
-            ),
-            F.min("node"),
-        ).alias("canonical")
-    )
-    return cc.join(pick, "root").select("node", "canonical")

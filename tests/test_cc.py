@@ -9,7 +9,7 @@ from pyspark.sql import functions as F
 
 from ontology_matcher_spark import oracle
 from ontology_matcher_spark.operators.canonicalize import (
-    canonical_assignment,
+    canonical_assignment_by_label,
     connected_components,
 )
 
@@ -60,7 +60,15 @@ def test_canonical_assignment_prefers_default_ns(spark):
         ("UMLS:7", "SYMP:2"),  # component without default ns
     ]
     df = spark.createDataFrame(edges, ["src", "dst"])
-    got = {r["node"]: r["canonical"] for r in canonical_assignment(df, "MONDO").collect()}
+    # every node labelled one type whose default namespace is MONDO
+    nodes = sorted({n for e in edges for n in e})
+    labels = spark.createDataFrame([(n, "Disease") for n in nodes], ["curie", "label"])
+    got = {
+        r["node"]: r["canonical"]
+        for r in canonical_assignment_by_label(
+            df, labels, {"Disease": "MONDO"}
+        ).collect()
+    }
     exp = oracle.canonical_assignment(edges, "MONDO")
     assert got == exp
     assert got["DOID:1"] == "MONDO:5"  # default-ns member beats smaller string
