@@ -75,7 +75,8 @@ def single_type(
 
 def _validate(mentions: DataFrame, types: dict[str, OntologyType]) -> DataFrame:
     """Add ``idx`` (when absent), ``ns``, ``local_id`` and
-    ``format_reason`` (NULL = a valid CURIE for the row's type).
+    ``format_reason`` (NULL = a valid CURIE for the row's type; a row
+    whose label is NULL or not in ``types`` has no accepted prefix).
 
     The reference aborts the whole run on any malformed id
     (ontology_formatter.py:279-303); a distributed pipeline must not —
@@ -103,7 +104,7 @@ def _validate(mentions: DataFrame, types: dict[str, OntologyType]) -> DataFrame:
         "format_reason",
         F.expr(
             f"CASE WHEN id IS NULL OR (NOT {has_colon}) THEN {q(R_BAD_FORMAT)} "
-            f"WHEN NOT {prefix_ok} THEN {q(R_BAD_PREFIX)} "
+            f"WHEN NOT coalesce({prefix_ok}, false) THEN {q(R_BAD_PREFIX)} "
             f"WHEN NOT (local_id RLIKE {local_re}) THEN {q(R_BAD_FORMAT)} END"
         ),
     )
@@ -280,8 +281,9 @@ def _format(
     )
 
     # ---- ONE records join + ONE metadata join for every row ----------
+    # (<=>: a NULL-label row finds its own record)
     rows = wide.join(
-        records, F.expr("raw_id = r_id AND label = r_key_label"), "left"
+        records, F.expr("raw_id = r_id AND label <=> r_key_label"), "left"
     )
     is_conv = "reason IS NULL"
     rows = rows.withColumn(
@@ -318,9 +320,13 @@ def _format(
 
     # failures are rescued into the formatted output iff their prefix
     # is the type's default namespace OR the strategy is MIXTURE
-    # (ontology_formatter.py:754-763)
+    # (ontology_formatter.py:754-763); NULL-safe, so a NULL id or a
+    # label outside ``types`` lands in exactly one output
     default_of_label = _label_case(types, "label", lambda o: q(o.default))
-    rescue = f"(substring_index(raw_id, ':', 1) = {default_of_label} OR {mixture})"
+    rescue = (
+        f"(coalesce(substring_index(raw_id, ':', 1) = {default_of_label}, false) "
+        f"OR {mixture})"
+    )
 
     def conv_or_raw(c: str) -> str:
         return f"CASE WHEN {is_conv} THEN {o(c)} ELSE r_{c} END AS {c}"
@@ -367,7 +373,8 @@ def link_mentions_multi(
     strategy: Strategy = Strategy.MIXTURE,
 ) -> tuple[DataFrame, DataFrame]:
     """Mixed-label mention table → (formatted, failed_formatted) in one
-    dataflow pass; each row is linked under its label's type.
+    dataflow pass; each row is linked under its label's type, and every
+    mention lands in exactly one of the two outputs.
 
     Every label-conditional expression is composed as SQL text and
     handed to the JVM in one ``F.expr``/``selectExpr`` per projection:

@@ -64,18 +64,26 @@ def test_formatted_parity(spark, bundle, fixture_dir, tname, strategy):
     )
 
 
-@pytest.mark.parametrize("tname", ["Gene", "Disease"])
-def test_multi_null_id_mention_parity(spark, bundle, fixture_dir, tname):
-    """A NULL-id mention under MIXTURE fails validation and is rescued;
-    no raw record joins to it, yet it keeps its type label, as in the
-    oracle. Both sides' NULLs read as '' (the oracle's own id is
-    None)."""
+@pytest.mark.parametrize(
+    "tname,strategy",
+    [
+        pytest.param("Gene", Strategy.MIXTURE, id="Gene"),
+        pytest.param("Disease", Strategy.MIXTURE, id="Disease"),
+        pytest.param("Gene", Strategy.UNIQUE, id="Gene-Unique"),
+    ],
+)
+def test_multi_null_id_mention_parity(spark, bundle, fixture_dir, tname, strategy):
+    """A NULL-id mention fails validation with 'Invalid id format'.
+    Under MIXTURE it is rescued; under UNIQUE it is a failed row (its
+    prefix is not the default namespace). Either way no raw record
+    joins to it, yet it keeps its type label, as in the oracle. Both
+    sides' NULLs read as '' (the oracle's own id is None)."""
     otype = ONTOLOGY_TYPES[tname]
     null_row = {c: None for c in MENTIONS.fieldNames()} | {"label": tname}
     mentions_py = [m for m in bundle.mentions if m["label"] == tname] + [null_row]
-    conv, failed = oracle.match(mentions_py, bundle.xref_edges, otype)
+    conv, failed = oracle.match(mentions_py, bundle.xref_edges, otype, strategy)
     exp_fmt, exp_failed = oracle.format_output(
-        mentions_py, conv, failed, bundle.terms, otype
+        mentions_py, conv, failed, bundle.terms, otype, strategy
     )
 
     mentions = spark.createDataFrame(
@@ -86,12 +94,19 @@ def test_multi_null_id_mention_parity(spark, bundle, fixture_dir, tname):
         _load(spark, fixture_dir, "xref_edges"),
         _load(spark, fixture_dir, "ontology_terms"),
         {tname: otype},
-        Strategy.MIXTURE,
+        strategy,
     )
-    got = sorted(tuple(r[c] or "" for c in FORMATTED_COLUMNS) for r in got_fmt.collect())
-    assert ("", "", tname, "", "", "", "", "", "", "") in got
+
+    def rows(df, cols):
+        return sorted(tuple(r[c] or "" for c in cols) for r in df.collect())
+
+    got, got_f = rows(got_fmt, FORMATTED_COLUMNS), rows(got_failed, FAILED_COLUMNS)
+    if strategy == Strategy.MIXTURE:
+        assert ("", "", tname, "", "", "", "", "", "", "") in got
+    else:
+        assert ("", "", tname, "", "", "", "", "", "", oracle.R_BAD_FORMAT) in got_f
     assert got == _oracle_rows(exp_fmt, FORMATTED_COLUMNS)
-    assert got_failed.count() == 0 and exp_failed == []
+    assert got_f == _oracle_rows(exp_failed, FAILED_COLUMNS)
 
 
 def test_edge_cases_present(bundle):
