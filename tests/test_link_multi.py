@@ -1,15 +1,17 @@
 """Single-pass multi-type linking over the mixed-label fixture must
 equal the union over labels of the pure-Python oracle's per-type runs,
-row-for-row (both strategies)."""
+row-for-row (both strategies); labels outside the run's types, or
+NULL, are routed, never dropped."""
 
 import os
 
 import pytest
+from pyspark.sql import functions as F
 
 from ontology_matcher_spark import oracle
 from ontology_matcher_spark.ontology_types import ONTOLOGY_TYPES, Strategy
 from ontology_matcher_spark.operators.link_multi import link_mentions_multi
-from ontology_matcher_spark.schemas import FAILED_COLUMNS, FORMATTED_COLUMNS
+from ontology_matcher_spark.schemas import FAILED_COLUMNS, FORMATTED_COLUMNS, MENTIONS
 
 
 def _spark_rows(df, cols):
@@ -55,10 +57,6 @@ def test_out_of_type_and_null_labels_routed(spark, fixture_dir, strategy):
     dropped: every mention lands in exactly one output. They fail with
     'Invalid prefix' — failed rows under UNIQUE, rescued raw records
     under MIXTURE — and the in-type rows are linked as without them."""
-    from pyspark.sql import functions as F
-
-    from ontology_matcher_spark.schemas import MENTIONS
-
     fixture, edges, terms = (
         spark.read.parquet(os.path.join(fixture_dir, f"{n}.parquet"))
         for n in ("mentions", "xref_edges", "ontology_terms")
