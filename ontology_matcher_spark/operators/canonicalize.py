@@ -23,6 +23,7 @@ import uuid
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ontology_matcher_spark.functions.arrays import label_case_sql, q
 from ontology_matcher_spark.functions.materialize import (
     drop_materialized,
     materialize_at,
@@ -241,14 +242,9 @@ def canonical_assignment_by_label(
     lbl = node_labels.groupBy(F.col("curie").alias("node")).agg(
         F.min("label").alias("label")
     )
-    defns = None
-    for label, ns in label_defaults.items():
-        branch = F.when(F.col("label") == label, F.lit(ns))
-        defns = branch if defns is None else defns.when(
-            F.col("label") == label, F.lit(ns)
-        )
-    nodes = cc.join(F.broadcast(lbl), "node", "left").select(
-        "node", "root", defns.alias("defns")
+    defns = label_case_sql(label_defaults, "label", q)
+    nodes = cc.join(F.broadcast(lbl), "node", "left").selectExpr(
+        "node", "root", f"{defns} AS defns"
     )
     pick = nodes.groupBy("root").agg(
         F.coalesce(

@@ -26,7 +26,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from ontology_matcher_spark.functions.arrays import EMPTY_ARR, q
+from ontology_matcher_spark.functions.arrays import EMPTY_ARR, label_case_sql, q
 from ontology_matcher_spark.ontology_types import (
     CURIE_LOCAL_PATTERN,
     OntologyType,
@@ -48,15 +48,6 @@ _RECORD_COLS = [
     "id", "name", "label", "resource", "description",
     "synonyms", "pmids", "taxid", "xrefs",
 ]
-
-
-def _label_case(types: dict[str, OntologyType], label: str, fn) -> str:
-    """SQL ``CASE WHEN label = t THEN fn(otype) ...`` ladder over the
-    types; NULL for any other label."""
-    whens = " ".join(
-        f"WHEN {label} = {q(t)} THEN ({fn(o)})" for t, o in types.items()
-    )
-    return f"(CASE {whens} END)"
 
 
 def _isin(col: str, values) -> str:
@@ -87,7 +78,7 @@ def _validate(mentions: DataFrame, types: dict[str, OntologyType]) -> DataFrame:
     if "idx" not in df.columns:
         df = df.withColumn("idx", F.monotonically_increasing_id())
     has_colon = "contains(id, ':')"
-    prefix_ok = _label_case(types, "label", lambda o: _isin("ns", o.choices))
+    prefix_ok = label_case_sql(types, "label", lambda o: _isin("ns", o.choices))
     local_re = q(f"^{CURIE_LOCAL_PATTERN}$")
     df = df.withColumns(
         {
@@ -191,7 +182,7 @@ def _route(
         return f"a_{ns_i[ns]}"
 
     def mcase(fn) -> str:
-        return _label_case(types, "mlabel", fn)
+        return label_case_sql(types, "mlabel", fn)
 
     ldefault = mcase(lambda o: q(o.default))
     # n_hits counts distance-1 neighbours in the MENTION's type's
@@ -322,7 +313,7 @@ def _format(
     # is the type's default namespace OR the strategy is MIXTURE
     # (ontology_formatter.py:754-763); NULL-safe, so a NULL id or a
     # label outside ``types`` lands in exactly one output
-    default_of_label = _label_case(types, "label", lambda o: q(o.default))
+    default_of_label = label_case_sql(types, "label", lambda o: q(o.default))
     rescue = (
         f"(coalesce(substring_index(raw_id, ':', 1) = {default_of_label}, false) "
         f"OR {mixture})"

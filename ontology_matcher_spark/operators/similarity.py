@@ -702,7 +702,7 @@ def ivf_probe_batch(
     query_id_col: str = "query_id",
     query_vec_col: str = "query_vec",
     broadcast_queries: bool = False,
-    salt_partitions: int = 4,
+    salt_partitions: int = 1,
 ) -> DataFrame:
     """`ivf_probe` for LARGE query tables — the offline all-vs-index
     shape: the query table is NEVER collected. Per-query nprobe
@@ -713,13 +713,15 @@ def ivf_probe_batch(
     static IN filter so partition pruning still holds. Same output
     contract and same results as `ivf_probe` (shared tie rule).
 
-    ``salt_partitions``: the shuffle join's key is salted — index rows
-    replicated across the salts, each query hashed (deterministically,
-    from its id) to one — because ``cluster`` alone caps join
-    parallelism at n_centroids and hot clusters skew it. Results are
-    unchanged (each query still meets every row of its probed
-    clusters exactly once). Raise it for large skewed runs alongside
-    AQE skew-join handling; 1 disables.
+    ``salt_partitions``: above 1, the shuffle join's key is salted —
+    index rows replicated across the salts, each query hashed
+    (deterministically, from its id) to one — because ``cluster``
+    alone caps join parallelism at n_centroids and hot clusters skew
+    it. Results are unchanged (each query still meets every row of
+    its probed clusters exactly once). Opt-in: every salt is one more
+    copy of the probed index rows, pure waste when no cluster is hot,
+    so raise it only for large skewed runs (alongside AQE skew-join
+    handling).
 
     ``broadcast_queries=True`` broadcast-joins the exploded query
     side (right when it fits — serving-sized batches; no shuffle, so
@@ -749,8 +751,10 @@ def ivf_probe_batch(
         cand = vb.join(F.broadcast(qp), "cluster").dropDuplicates(
             [query_id_col, "id"]
         )
+    elif salt_partitions <= 1:
+        cand = vb.join(qp, "cluster").dropDuplicates([query_id_col, "id"])
     else:
-        s = max(1, salt_partitions)
+        s = salt_partitions
         vb = vb.withColumn(
             "__salt", F.explode(F.sequence(F.lit(0), F.lit(s - 1)))
         )

@@ -2,7 +2,13 @@
 
 Local mode mirrors the knobs we would set on a real cluster:
 AQE (incl. skew-join splitting), Arrow for pandas UDFs, shuffle
-partitions ~ cores, UTC timestamps (DuckDB oracle comparison).
+partitions ~ cores, UTC timestamps (DuckDB oracle comparison), and a
+codegen class cache sized to the engine's working set.
+
+The codegen cache size (``spark.sql.codegen.cache.maxEntries``) is a
+static conf: it takes effect only when a fresh JVM first generates
+code. A session re-created on a JVM that has already compiled a query
+keeps that JVM's cache, whatever the new builder says.
 """
 
 from __future__ import annotations
@@ -44,6 +50,18 @@ def get_spark(
         # plan hung >9 min in the OPTIMIZER at round 1; filters still
         # push down via the other rules). The conf exists for this.
         .config("spark.sql.constraintPropagation.enabled", "false")
+        # Spark's codegen class cache (an LRU, default 100 classes) is
+        # smaller than this engine's working set. Measured with
+        # tools/codegen_probe.py (4-vCPU VM): run_pipeline Gene+Disease
+        # generates 108 distinct classes (610 KB of bytecode) at
+        # kgbench large_ontology scale; the probe's five pipeline
+        # shapes 323-325 (2.5 MB) at fixture scale. At 100 each warm
+        # Gene+Disease run Janino-recompiled 76-77 classes and the
+        # probe's repeat pass 576, which the C2 JIT threads then
+        # re-compiled too; at 1000 (~3x the working set) a warm run
+        # compiles 0-4, and metaspace after the same passes is within
+        # 1 MB of the default's (172-173 MB).
+        .config("spark.sql.codegen.cache.maxEntries", "1000")
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")

@@ -558,9 +558,14 @@ def test_ivf_probe_batch_matches_serving(spark, tmp_path):
     )
     serve = {(r["query_id"], r["rank"], r["id"], round(r["score"], 6))
              for r in ivf_probe(spark, path, q, k=3, nprobe=2).collect()}
-    batch = {(r["query_id"], r["rank"], r["id"], round(r["score"], 6))
-             for r in ivf_probe_batch(spark, path, q, k=3, nprobe=2).collect()}
-    assert batch == serve and batch
+    for salt in (1, 4):  # the default join and the opt-in salted one
+        batch = {
+            (r["query_id"], r["rank"], r["id"], round(r["score"], 6))
+            for r in ivf_probe_batch(
+                spark, path, q, k=3, nprobe=2, salt_partitions=salt
+            ).collect()
+        }
+        assert batch == serve and batch, salt
 
     # 10k-row query table: runs distributed (only the distinct probed
     # cluster ids — ≤ n_centroids ints — ever reach the driver)
