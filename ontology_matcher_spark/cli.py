@@ -176,21 +176,20 @@ def cmd_detect(args) -> int:
 
 
 def cmd_annindex(args) -> int:
-    """Materialize the (band, bucket)-partitioned ANN serving index
-    from an embeddings parquet (vec_id, embedding) — the build-job
-    half of the probe path (similarity.write_ann_index)."""
+    """Materialize the cluster-partitioned IVF serving index from an
+    embeddings parquet (vec_id, embedding) — the build-job half of the
+    probe path (similarity.train_ivf_centroids + write_ivf_index)."""
     from ontology_matcher_spark.operators.similarity import (
-        make_band_planes,
-        write_ann_index,
+        train_ivf_centroids,
+        write_ivf_index,
     )
 
     spark = _get_spark(args)
     vectors = spark.read.parquet(args.embeddings)
-    dim = len(vectors.select("embedding").first()["embedding"])
-    bands = make_band_planes(
-        dim, n_planes=args.planes, n_bands=args.bands, seed=args.seed
+    centroids = train_ivf_centroids(
+        vectors, n_centroids=args.centroids, seed=args.seed
     )
-    write_ann_index(vectors, bands, args.out)
+    write_ivf_index(vectors, centroids, args.out)
     print(f"ann index: {args.out}")
     return 0
 
@@ -201,7 +200,7 @@ def cmd_annprobe(args) -> int:
     query_id/query_vec columns)."""
     from pyspark.sql import functions as F
 
-    from ontology_matcher_spark.operators.similarity import ann_probe
+    from ontology_matcher_spark.operators.similarity import ivf_probe
 
     spark = _get_spark(args)
     q = spark.read.parquet(args.queries)
@@ -210,7 +209,7 @@ def cmd_annprobe(args) -> int:
             F.col("vec_id").alias("query_id"),
             F.col("embedding").alias("query_vec"),
         )
-    res = ann_probe(spark, args.index, q, k=args.k)
+    res = ivf_probe(spark, args.index, q, k=args.k, nprobe=args.nprobe)
     res.write.mode("overwrite").parquet(args.out)
     print(f"topk: {args.out}")
     return 0
@@ -317,15 +316,13 @@ def build_parser() -> argparse.ArgumentParser:
     pde.set_defaults(fn=cmd_detect)
 
     pai = sub.add_parser(
-        "annindex", help="Build (band,bucket)-partitioned ANN index"
+        "annindex", help="Build a cluster-partitioned IVF ANN index"
     )
     pai.add_argument("--embeddings", "-i", required=True,
                      help="Embeddings parquet (vec_id, embedding)")
     pai.add_argument("--out", "-o", required=True, help="Index directory")
-    pai.add_argument("--planes", type=int, default=12,
-                     help="Hyperplanes per band (bucket fineness)")
-    pai.add_argument("--bands", type=int, default=4,
-                     help="Independent bands (recall)")
+    pai.add_argument("--centroids", type=int, default=64,
+                     help="IVF clusters (one index partition each)")
     pai.add_argument("--seed", type=int, default=42)
     pai.set_defaults(fn=cmd_annindex)
 
@@ -336,6 +333,8 @@ def build_parser() -> argparse.ArgumentParser:
                           "embeddings parquet — first N rows used)")
     pap.add_argument("--num-queries", type=int, default=100)
     pap.add_argument("--k", type=int, default=10)
+    pap.add_argument("--nprobe", type=int, default=4,
+                     help="Nearest clusters read per query (recall)")
     pap.add_argument("--out", "-o", required=True, help="Top-k parquet out")
     pap.set_defaults(fn=cmd_annprobe)
 

@@ -3,4 +3,3 @@ from ontology_matcher_spark.functions.arrays import (  # noqa: F401
     sql_join_lst,
     split_pipe,
 )
-from ontology_matcher_spark.functions.salting import salted_collect_set  # noqa: F401

@@ -20,21 +20,6 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 
-def salted_collect_set(
-    df: DataFrame,
-    keys: list[str],
-    value: Column | str,
-    alias: str,
-    num_salts: int = 16,
-) -> DataFrame:
-    """Two-phase salted ``collect_set(value)`` grouped by ``keys``.
-
-    Returns one row per key combination with ``alias`` =
-    sorted-distinct array of values."""
-    v = F.col(value) if isinstance(value, str) else value
-    return salted_collect_sets(df, keys, {alias: v}, num_salts)
-
-
 def salted_collect_sets(
     df: DataFrame,
     keys: list[str],

@@ -86,8 +86,3 @@ ALL_NAMESPACES: tuple[str, ...] = tuple(
 # on violation (the reference raises at :302-303); we tag + route to
 # the failed side-channel — SURVEY.md §2.2 P1.
 CURIE_LOCAL_PATTERN = r"[a-z0-9A-Z\.\*\+]+"
-
-
-def curie_pattern(choices: tuple[str, ...]) -> str:
-    ns = "|".join(choices)
-    return rf"^({ns}):{CURIE_LOCAL_PATTERN}$"

@@ -75,12 +75,6 @@ def _affine_params(num_hashes: int, seed: int = 42) -> list[tuple[int, int]]:
     ]
 
 
-def hashed_shingles(sh: Column) -> Column:
-    """shingles → base 31-bit hashes (materialize ONCE per row; the
-    per-function hashes derive from this by affine transforms)."""
-    return F.transform(sh, lambda s: F.pmod(F.xxhash64(s), F.lit(_MERSENNE)))
-
-
 def _base_hash(col: Column, hash_fn: str) -> Column:
     """31-bit base hash of a shingle string.
 
@@ -109,21 +103,6 @@ def _band_hash(band: int, elems: list[Column], hash_fn: str) -> Column:
         )
         return F.conv(F.substring(F.md5(joined), 1, 15), 16, 10).cast("long")
     return F.xxhash64(F.lit(band), *elems)
-
-
-def minhash_signature_from_hashes(hsh: Column, num_hashes: int = 32) -> Column:
-    """num_hashes-wide MinHash from pre-hashed shingles: min over
-    (a_i·h + b_i) mod p. Array-lambda form — prefer
-    `minhash_signatures` (explode + codegen'd min aggs) in hot paths:
-    higher-order functions evaluate interpreted (~10ms/row at 32×50)."""
-    params = _affine_params(num_hashes)
-
-    def mk(a: int, b: int):
-        return lambda h: F.pmod(h * a + b, F.lit(_MERSENNE))
-
-    return F.array(
-        *[F.array_min(F.transform(hsh, mk(a, b))) for a, b in params]
-    )
 
 
 def minhash_signatures(

@@ -126,17 +126,20 @@ def _route(
     # dictionary side (ontology-bounded: one row per src curie), and
     # the mention scan does a 1:1 broadcast map-join — every routing
     # quantity below is a flat map-lookup expression, and the mention
-    # table is never shuffled for candidate generation at all. The
-    # dictionary is pre-distinct'd so counts equal the reference's
-    # set sizes.
-    edges = (
+    # table is never shuffled for candidate generation at all.
+    # collect_set dedups, so cnt = size(cands) is the reference's set
+    # size with no distinct of the edges first. It equals the number
+    # of distinct (src, ns, dst) edges because XREF_EDGES.dst_curie is
+    # declared non-null: only a NULL dst_curie (which collect_set
+    # skips) could tell the two apart. BIGINT keeps the routing sums'
+    # type.
+    per_ns = (
         xref_edges.where(F.expr(_isin("dst_ns", all_ns)))
-        .select("src_curie", "dst_ns", "dst_curie")
-        .distinct()
-    )
-    per_ns = edges.groupBy("src_curie", "dst_ns").agg(
-        F.expr("count(1) AS cnt"),
-        F.expr("sort_array(collect_set(dst_curie)) AS cands"),
+        .groupBy("src_curie", "dst_ns")
+        .agg(F.expr("sort_array(collect_set(dst_curie)) AS cands"))
+        .selectExpr(
+            "src_curie", "dst_ns", "CAST(size(cands) AS BIGINT) AS cnt", "cands"
+        )
     )
     emap = per_ns.groupBy("src_curie").agg(
         F.expr(

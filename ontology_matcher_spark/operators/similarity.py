@@ -1,34 +1,43 @@
 """Similarity search over an embedding column (driver-mandated):
-brute-force cosine top-k baseline + LSH-bucketed scale path.
+brute-force cosine top-k baseline, IVF ANN index, LSH near-dup pairs.
 
 - brute force: broadcast the (small) query set, one vectorized cosine
   per (vector, query) pair, top-k via window — correct baseline,
   O(n·q);
-- scale path: random-hyperplane LSH buckets (SimHash for vectors) —
-  candidates only join within a bucket; multiple independent bands
-  (`lsh_topk_multiband` / `embedding_near_dup_multiband`) recover the
-  recall a single fine-grained table loses. At 10^12 rows write the
-  vector table partitioned by (band, bucket) so probes prune
-  partitions.
+- ANN serving: IVF — centroids trained on a bounded sample, one copy
+  of each vector written PARTITIONED BY its nearest centroid, probes
+  read only their ``nprobe`` nearest clusters' partitions and re-rank
+  exactly (`ivf_probe` for small query sets, `ivf_probe_batch` for
+  query tables that must not be collected). IVF is the one ANN index
+  family: against a banded random-hyperplane index on 20,000 × 64
+  vectors (local[4]) it had higher recall@10 (0.967-0.997 vs
+  0.449-0.963) at lower build and probe time at every setting tried
+  (ROADMAP direction 2 has the table);
+- near-dup pairs: random-hyperplane LSH buckets (SimHash for vectors)
+  — candidates only join within a bucket; multiple independent bands
+  (`embedding_near_dup_multiband`) recover the recall a single
+  fine-grained table loses.
 
 Hot-path execution — MEASURED, not assumed (600k pairs × 64 dims,
-warm local[16] minima, this sandbox):
+warm local[16] minima):
 
   interpreted `aggregate`/`zip_with` HOF ........ 1.04 s
   unrolled 64-term codegen `F.get` chain ........ 2.2-3.6 s (!)
   Arrow-batched numpy pandas_udf (einsum) ....... 0.57 s
 
-The round-2 advice to replace the HOFs assumed whole-stage codegen
-would win; the unrolled chain is actually ~2-3× SLOWER than the HOF
+Replacing the HOFs on the assumption that whole-stage codegen would
+win does not pay: the unrolled chain is actually ~2-3× SLOWER than the HOF
 (per-term expression-eval overhead beats the HOF's tight element
 loop), while the numpy matmul UDF wins ~2× over the HOF and is the
 shape that holds at 10^9 rows (SIMD over Arrow batches, no per-element
-JVM dispatch). So: every scoring/bucketing hot path below runs the
-pandas UDF; the column-expression `cosine`/`hyperplane_bucket` HOF
-forms remain for ad-hoc/oracle use where a Column is required.
+JVM dispatch). So: every scoring/bucketing hot path below runs a
+pandas UDF; the column-expression `cosine` HOF form remains for
+`brute_force_topk` when the embedding width is unknown.
 """
 
 from __future__ import annotations
+
+import json
 
 import numpy as np
 import pandas as pd
@@ -173,27 +182,6 @@ def _infer_dim(df: DataFrame, col: str) -> int | None:
     return int(row["d"]) if row is not None and row["d"] is not None else None
 
 
-def hyperplane_bucket(
-    vec: Column, planes: list[list[float]]
-) -> Column:
-    """Random-hyperplane LSH bucket id as a column expression (sign
-    bit per plane → int). Ad-hoc use; the operators below batch the
-    same computation through `band_buckets_udf` (numpy matmul)."""
-    bucket = F.lit(0)
-    for i, p in enumerate(planes):
-        proj = F.aggregate(
-            F.zip_with(
-                vec,
-                F.array(*[F.lit(float(x)) for x in p]),
-                lambda x, y: x * y,
-            ),
-            F.lit(0.0),
-            lambda acc, v: acc + v,
-        )
-        bucket = bucket + F.when(proj >= 0, F.lit(2**i)).otherwise(F.lit(0))
-    return bucket
-
-
 def make_planes(dim: int, n_planes: int = 8, seed: int = 42) -> list[list[float]]:
     import random
 
@@ -225,174 +213,6 @@ def _with_band_buckets(
         F.posexplode(band_buckets_udf(bands)(F.col(vec_col))).alias(
             "band", "bucket"
         ),
-    )
-
-
-def lsh_topk(
-    vectors: DataFrame,
-    queries: DataFrame,
-    planes: list[list[float]],
-    k: int = 10,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    query_id_col: str = "query_id",
-    query_vec_col: str = "query_vec",
-) -> DataFrame:
-    """Approximate top-k: only vectors sharing the query's hyperplane
-    bucket are scored. SINGLE-table form — recall collapses at fine
-    plane counts; use `lsh_topk_multiband` for real ANN serving (all
-    bands probed, union of candidates, one exact re-rank)."""
-    return lsh_topk_multiband(
-        vectors, queries, [planes], k,
-        id_col, vec_col, query_id_col, query_vec_col,
-    )
-
-
-def lsh_topk_multiband(
-    vectors: DataFrame,
-    queries: DataFrame,
-    bands: list[list[list[float]]],
-    k: int = 10,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    query_id_col: str = "query_id",
-    query_vec_col: str = "query_vec",
-) -> DataFrame:
-    """Multi-table ANN probe — the 10^9-vector serving shape: the
-    query is hashed into EVERY band's table, candidates sharing any
-    (band, bucket) are unioned and deduped, then ONE exact cosine
-    re-rank picks top-k. Fine per-band plane counts keep buckets
-    small (probe cost ~ Σ_band |bucket|); the band union recovers the
-    recall a single fine table loses to bucket splits — mirroring
-    `embedding_near_dup_multiband`. At scale, materialize the layout
-    with `write_ann_index` and serve with `ann_probe`: the index is
-    partitioned by (band, bucket) so each probe's scan prunes to the
-    probed buckets' partitions instead of rescanning the table."""
-    dim = len(bands[0][0])
-    vb = _with_band_buckets(
-        vectors.select(F.col(id_col), F.col(vec_col).alias("__v")),
-        "__v", bands, [id_col, "__v"],
-    )
-    qb = F.broadcast(
-        _with_band_buckets(
-            queries.select(F.col(query_id_col), F.col(query_vec_col).alias("__qv")),
-            "__qv", bands, [query_id_col, "__qv"],
-        )
-    )
-    cand = (
-        vb.join(qb, ["band", "bucket"])
-        .dropDuplicates([query_id_col, id_col])  # any-band union, scored once
-    )
-    scored = cand.select(
-        query_id_col,
-        id_col,
-        cosine_udf(dim)(F.col("__v"), F.col("__qv")).alias("score"),
-    )
-    w = Window.partitionBy(query_id_col).orderBy(F.desc("score"), F.col(id_col))
-    return scored.withColumn("rank", F.row_number().over(w)).where(F.col("rank") <= k)
-
-
-def write_ann_index(
-    vectors: DataFrame,
-    bands: list[list[list[float]]],
-    path: str,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> str:
-    """Materialize the ANN serving layout `lsh_topk_multiband`
-    prescribes: one copy of each vector per band, written PARTITIONED
-    BY (band, bucket) so a probe's (band, bucket) equality filters
-    prune to exactly the partitions its query hashes into — the
-    pruned read is O(Σ_band |bucket|) files instead of a full-table
-    rescan per query batch. Storage cost: n_bands × the vector table
-    (the standard multi-table LSH trade). The hyperplane bands are
-    stamped into ``<path>/_ANN_META.json`` so probes are
-    self-contained."""
-    import json
-
-    from ontology_matcher_spark.functions.fs import fs_write_text
-
-    vb = _with_band_buckets(
-        vectors.select(F.col(id_col).alias("id"), F.col(vec_col).alias("v")),
-        "v", bands, ["id", "v"],
-    )
-    vb.write.mode("overwrite").partitionBy("band", "bucket").parquet(path)
-    fs_write_text(
-        vectors.sparkSession,
-        f"{path}/_ANN_META.json",
-        json.dumps({"bands": bands, "dim": len(bands[0][0])}),
-    )
-    return path
-
-
-def _empty_topk(
-    spark, queries: DataFrame, query_id_col: str, index_path: str
-) -> DataFrame:
-    """Empty probe result whose query-id AND vector-id types MATCH the
-    normal path's (query-id from the queries frame, id from the
-    index's own parquet schema — callers union/append probe outputs,
-    so the no-queries edge case must not change the schema)."""
-    qid_type = queries.schema[query_id_col].dataType.simpleString()
-    id_type = spark.read.parquet(index_path).schema["id"].dataType.simpleString()
-    return spark.createDataFrame(
-        [],
-        f"{query_id_col} {qid_type}, id {id_type}, score double, rank int",
-    )
-
-
-def ann_probe(
-    spark,
-    path: str,
-    queries: DataFrame,
-    k: int = 10,
-    query_id_col: str = "query_id",
-    query_vec_col: str = "query_vec",
-) -> DataFrame:
-    """Top-k probe against a `write_ann_index` layout: hash the (small,
-    broadcastable) query set into every band, push ONE
-    (band, bucket)-disjunction filter into the parquet scan —
-    partition pruning reads only the probed buckets' files — then
-    union candidates across bands, dedupe, and exact-cosine re-rank.
-    Same output contract as `lsh_topk_multiband` (which recomputes
-    buckets from the raw vector table instead of reading the index)."""
-    import json
-
-    from ontology_matcher_spark.functions.fs import fs_read_text
-
-    meta = json.loads(fs_read_text(spark, f"{path}/_ANN_META.json"))
-    bands = meta["bands"]
-    dim = meta["dim"]
-    qb = _with_band_buckets(
-        queries.select(
-            F.col(query_id_col), F.col(query_vec_col).alias("__qv")
-        ),
-        "__qv", bands, [query_id_col, "__qv"],
-    )
-    # the probed (band, bucket) set is tiny: n_queries × n_bands rows
-    probe_rows = qb.select("band", "bucket").distinct().collect()
-    by_band: dict[int, set[int]] = {}
-    for r in probe_rows:
-        by_band.setdefault(int(r["band"]), set()).add(int(r["bucket"]))
-    pred = None
-    for band, buckets in sorted(by_band.items()):
-        clause = (F.col("band") == band) & F.col("bucket").isin(
-            *sorted(buckets)
-        )
-        pred = clause if pred is None else (pred | clause)
-    if pred is None:  # no queries
-        return _empty_topk(spark, queries, query_id_col, path)
-    vb = spark.read.parquet(path).where(pred)
-    cand = vb.join(F.broadcast(qb), ["band", "bucket"]).dropDuplicates(
-        [query_id_col, "id"]
-    )
-    scored = cand.select(
-        query_id_col,
-        "id",
-        cosine_udf(dim)(F.col("v"), F.col("__qv")).alias("score"),
-    )
-    w = Window.partitionBy(query_id_col).orderBy(F.desc("score"), F.col("id"))
-    return scored.withColumn("rank", F.row_number().over(w)).where(
-        F.col("rank") <= k
     )
 
 
@@ -564,9 +384,9 @@ def write_ivf_index(
     vec_col: str = "embedding",
 ) -> str:
     """IVF serving layout: ONE copy of each vector, PARTITIONED BY its
-    nearest-centroid cluster (vs the LSH layout's n_bands copies —
-    IVF trades the duplication for an nprobe recall knob). Centroids
-    stamped as ``_IVF_META.json`` for self-contained probes.
+    nearest-centroid cluster; ``nprobe`` at probe time is the recall
+    knob. Centroids stamped as ``_IVF_META.json`` for self-contained
+    probes.
 
     Malformed/NULL vectors (cluster -1 from `ivf_cluster_udf`) are
     EXCLUDED from the index — probes only rank centroid indices
@@ -574,7 +394,6 @@ def write_ivf_index(
     reads. The exclusion is logged (guard convention: drops are never
     silent), so `nprobe = n_centroids ≡ brute force` holds exactly
     over the indexed (well-formed) rows."""
-    import json
     import logging
 
     from ontology_matcher_spark.functions.fs import fs_write_text
@@ -607,6 +426,37 @@ def write_ivf_index(
     return path
 
 
+def _read_ivf_meta(spark, path: str) -> dict:
+    """The index's ``_IVF_META.json`` (centroids + dim). A path with no
+    such file is not an IVF index — an empty directory, a typo, or a
+    layout from an older index format — so fail with the path named
+    instead of an opaque ``json.loads(None)`` TypeError."""
+    from ontology_matcher_spark.functions.fs import fs_read_text
+
+    text = fs_read_text(spark, f"{path}/_IVF_META.json")
+    if text is None:
+        raise ValueError(
+            f"{path} is not an IVF index (no _IVF_META.json); "
+            "rebuild it with `annindex` (write_ivf_index)"
+        )
+    return json.loads(text)
+
+
+def _empty_topk(
+    spark, queries: DataFrame, query_id_col: str, index_path: str
+) -> DataFrame:
+    """Empty probe result whose query-id AND vector-id types MATCH the
+    normal path's (query-id from the queries frame, id from the
+    index's own parquet schema — callers union/append probe outputs,
+    so the no-queries edge case must not change the schema)."""
+    qid_type = queries.schema[query_id_col].dataType.simpleString()
+    id_type = spark.read.parquet(index_path).schema["id"].dataType.simpleString()
+    return spark.createDataFrame(
+        [],
+        f"{query_id_col} {qid_type}, id {id_type}, score double, rank int",
+    )
+
+
 def ivf_probe(
     spark,
     path: str,
@@ -621,12 +471,8 @@ def ivf_probe(
     IN-filter pushed into the scan — partition pruning), then ONE
     exact cosine re-rank over the union. Recall rises monotonically
     with nprobe (nprobe = n_centroids ≡ brute force); same output
-    contract as `ann_probe`."""
-    import json
-
-    from ontology_matcher_spark.functions.fs import fs_read_text
-
-    meta = json.loads(fs_read_text(spark, f"{path}/_IVF_META.json"))
+    contract as `brute_force_topk` (index id column ``id``)."""
+    meta = _read_ivf_meta(spark, path)
     C = np.asarray(meta["centroids"], dtype=np.float64)
     dim = meta["dim"]
     qrows = queries.select(query_id_col, query_vec_col).collect()
@@ -726,12 +572,9 @@ def ivf_probe_batch(
     ``broadcast_queries=True`` broadcast-joins the exploded query
     side (right when it fits — serving-sized batches; no shuffle, so
     no salt); the default shuffle join is the 10^9-query shape."""
-    import json
-
-    from ontology_matcher_spark.functions.fs import fs_read_text
     from ontology_matcher_spark.functions.materialize import materialize
 
-    meta = json.loads(fs_read_text(spark, f"{path}/_IVF_META.json"))
+    meta = _read_ivf_meta(spark, path)
     dim = meta["dim"]
     qp = queries.select(
         query_id_col,
@@ -775,57 +618,3 @@ def ivf_probe_batch(
         F.col("rank") <= k
     )
 
-
-def ann_probe_batch(
-    spark,
-    path: str,
-    queries: DataFrame,
-    k: int = 10,
-    query_id_col: str = "query_id",
-    query_vec_col: str = "query_vec",
-    broadcast_queries: bool = False,
-) -> DataFrame:
-    """`ann_probe` for LARGE query tables: queries are hashed into
-    (band, bucket) DISTRIBUTED (never collected); the driver only
-    materializes the distinct probed (band, bucket) set — bounded by
-    the index's partition count (n_bands × 2^n_planes), independent
-    of query count — to push the pruning disjunction into the scan.
-    Default shuffle join on (band, bucket) for the all-vs-index case;
-    ``broadcast_queries=True`` for serving-sized batches. Same output
-    contract and results as `ann_probe`."""
-    import json
-
-    from ontology_matcher_spark.functions.fs import fs_read_text
-    from ontology_matcher_spark.functions.materialize import materialize
-
-    meta = json.loads(fs_read_text(spark, f"{path}/_ANN_META.json"))
-    bands = meta["bands"]
-    dim = meta["dim"]
-    qb = _with_band_buckets(
-        queries.select(F.col(query_id_col), F.col(query_vec_col).alias("__qv")),
-        "__qv", bands, [query_id_col, "__qv"],
-    )
-    qb = materialize(qb, "ann-probe-batch")
-    probe_rows = qb.select("band", "bucket").distinct().collect()
-    by_band: dict[int, set[int]] = {}
-    for r in probe_rows:
-        by_band.setdefault(int(r["band"]), set()).add(int(r["bucket"]))
-    pred = None
-    for band, buckets in sorted(by_band.items()):
-        clause = (F.col("band") == band) & F.col("bucket").isin(*sorted(buckets))
-        pred = clause if pred is None else (pred | clause)
-    if pred is None:
-        return _empty_topk(spark, queries, query_id_col, path)
-    vb = spark.read.parquet(path).where(pred)
-    if broadcast_queries:
-        qb = F.broadcast(qb)
-    cand = vb.join(qb, ["band", "bucket"]).dropDuplicates([query_id_col, "id"])
-    scored = cand.select(
-        query_id_col,
-        "id",
-        cosine_udf(dim)(F.col("v"), F.col("__qv")).alias("score"),
-    )
-    w = Window.partitionBy(query_id_col).orderBy(F.desc("score"), F.col("id"))
-    return scored.withColumn("rank", F.row_number().over(w)).where(
-        F.col("rank") <= k
-    )

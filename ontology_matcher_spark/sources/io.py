@@ -169,12 +169,5 @@ def write_table(
     return path
 
 
-def read_stage_table(spark: SparkSession, base_dir: str, name: str) -> DataFrame:
-    """Read back a `write_table` output from either backend."""
-    if iceberg_available(spark):
-        return spark.read.table(f"{ICEBERG_CATALOG}.{name}")
-    return spark.read.parquet(os.path.join(base_dir, name))
-
-
 def read_table(spark: SparkSession, base_dir: str, name: str) -> DataFrame:
     return spark.read.parquet(os.path.join(base_dir, name))

@@ -255,17 +255,17 @@ def test_cli_annindex_probe_mediaembed(spark, tmp_path):
     emb.write.parquet(src)
     idx = str(tmp_path / "annidx")
     topk = str(tmp_path / "topk")
-    assert main(["annindex", "-i", src, "-o", idx,
-                 "--planes", "4", "--bands", "2"]) == 0
-    assert os.path.exists(os.path.join(idx, "_ANN_META.json"))
-    assert main(["annprobe", "-x", idx, "-q", src,
-                 "--num-queries", "3", "--k", "4", "-o", topk]) == 0
+    assert main(["annindex", "-i", src, "-o", idx, "--centroids", "4"]) == 0
+    assert os.path.exists(os.path.join(idx, "_IVF_META.json"))
+    assert main(["annprobe", "-x", idx, "-q", src, "--num-queries", "3",
+                 "--k", "4", "--nprobe", "1", "-o", topk]) == 0
     got = spark.read.parquet(topk)
     rows = got.collect()
     assert {r["query_id"] for r in rows} == {0, 1, 2}
-    # a vector is its own exact nearest neighbour when bucketed with itself
+    # a query's first probed cluster is the one its own vector was
+    # indexed under, so the vector is its own rank-1 neighbour
     r1 = {r["query_id"]: r["id"] for r in rows if r["rank"] == 1}
-    assert all(r1[q] == q for q in r1)
+    assert r1 == {0: 0, 1: 1, 2: 2}
 
     media = os.path.join(
         os.path.dirname(os.path.dirname(os.path.abspath(__file__))),

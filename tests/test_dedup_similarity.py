@@ -177,94 +177,6 @@ def test_multiband_neardup_beats_single_table_recall(spark):
         assert a < b
 
 
-def test_lsh_topk_probe(spark):
-    """lsh_topk scores only same-bucket vectors: results are a subset
-    of the brute-force ranking and the query's own vector (bucket-
-    identical, cosine 1.0) is always recovered at rank 1."""
-    import numpy as np
-
-    from ontology_matcher_spark.operators.similarity import lsh_topk
-
-    rng = np.random.default_rng(23)
-    vecs = rng.normal(size=(100, 16)).astype("float64")
-    df = spark.createDataFrame(
-        [(i, [float(x) for x in v]) for i, v in enumerate(vecs)],
-        ["vec_id", "embedding"],
-    )
-    q = df.where(F.col("vec_id") < 3).select(
-        F.col("vec_id").alias("query_id"), F.col("embedding").alias("query_vec")
-    )
-    planes = make_planes(16, n_planes=4, seed=7)
-    got = lsh_topk(df, q, planes, k=5).collect()
-    exact = {
-        (r["query_id"], r["vec_id"]): r["score"]
-        for r in brute_force_topk(df, q, k=100).collect()
-    }
-    by_q = {}
-    for r in got:
-        by_q.setdefault(r["query_id"], []).append(r)
-    for qi in (0, 1, 2):
-        rows = sorted(by_q[qi], key=lambda r: r["rank"])
-        assert rows[0]["vec_id"] == qi and rows[0]["score"] > 0.999
-        for r in rows:
-            assert abs(exact[(qi, r["vec_id"])] - r["score"]) < 1e-9
-        ranks = [r["rank"] for r in rows]
-        assert ranks == list(range(1, len(rows) + 1))
-
-
-def test_lsh_topk_multiband_recall_beats_single_table(spark):
-    """Multi-table probe: at 12 planes a single table's bucket splits
-    lose most true nearest neighbours; 4 independent 12-plane bands
-    recover ≥95% of them. Scores on the recovered rows are EXACT
-    (one cosine re-rank over the candidate union)."""
-    import numpy as np
-
-    from ontology_matcher_spark.operators.similarity import (
-        lsh_topk,
-        lsh_topk_multiband,
-        make_band_planes,
-    )
-
-    rng = np.random.default_rng(29)
-    base = rng.normal(size=(60, 32)).astype("float64")
-    df = spark.createDataFrame(
-        [(i, [float(x) for x in v]) for i, v in enumerate(base)],
-        ["vec_id", "embedding"],
-    )
-    # queries: noisy copies of the first 20 vectors — the true top-1
-    # neighbour of query i is vector i
-    q = spark.createDataFrame(
-        [
-            (int(i), [float(x) for x in base[i] + rng.normal(scale=0.02, size=32)])
-            for i in range(20)
-        ],
-        ["query_id", "query_vec"],
-    )
-    bands = make_band_planes(32, n_planes=12, n_bands=4, seed=13)
-
-    def top1_hits(rows):
-        best = {}
-        for r in rows:
-            if r["rank"] == 1:
-                best[r["query_id"]] = r["vec_id"]
-        return sum(1 for qi, vi in best.items() if qi == vi)
-
-    multi_rows = lsh_topk_multiband(df, q, bands, k=3).collect()
-    single_rows = lsh_topk(df, q, bands[0], k=3).collect()
-    hits_multi = top1_hits(multi_rows)
-    hits_single = top1_hits(single_rows)
-    assert hits_multi >= 19  # ≥95% of 20 queries
-    assert hits_multi > hits_single  # single fine table demonstrably misses
-
-    # exact re-rank: every returned score equals the brute-force score
-    exact = {
-        (r["query_id"], r["vec_id"]): r["score"]
-        for r in brute_force_topk(df, q, k=60).collect()
-    }
-    for r in multi_rows:
-        assert abs(exact[(r["query_id"], r["vec_id"])] - r["score"]) < 1e-9
-
-
 def test_minhash_hot_bucket_guard_reports_drops(spark):
     """Adversarial corpus: identical docs collapse BEFORE banding (no
     O(k²) bucket blow-up), and a boilerplate cluster wider than
@@ -321,103 +233,17 @@ def test_embedding_multiband_guard_reports_drops(spark):
     assert out < 50 * 49 // 2  # pileup pairs did not materialize
 
 
-def test_ann_index_probe_prunes_partitions(spark, tmp_path):
-    """write_ann_index + ann_probe: (band, bucket)-partitioned layout
-    gives the probe (a) EXACTLY lsh_topk_multiband's top-k and (b) a
-    pruned scan — the probed file set is a small fraction of the
-    index's files (partition pruning, the 10^9-vector serving
-    requirement from similarity.py's r3 docstring)."""
-    import glob
-    import os
-
-    import numpy as np
-    from pyspark.sql import functions as F
-
-    from ontology_matcher_spark.operators.similarity import (
-        ann_probe,
-        lsh_topk_multiband,
-        make_band_planes,
-        write_ann_index,
-    )
-
-    rng = np.random.default_rng(31)
-    base = rng.normal(size=(120, 16)).astype("float64")
-    df = spark.createDataFrame(
-        [(i, [float(x) for x in v]) for i, v in enumerate(base)],
-        ["vec_id", "embedding"],
-    )
-    q = spark.createDataFrame(
-        [
-            (int(i), [float(x) for x in base[i] + rng.normal(scale=0.02, size=16)])
-            for i in range(3)
-        ],
-        ["query_id", "query_vec"],
-    )
-    bands = make_band_planes(16, n_planes=5, n_bands=3, seed=17)
-    path = str(tmp_path / "ann_index")
-    write_ann_index(df, bands, path)
-
-    probe = ann_probe(spark, path, q, k=5)
-    ref = lsh_topk_multiband(df, q, bands, k=5)
-    got = {(r["query_id"], r["rank"], r["id"], round(r["score"], 6))
-           for r in probe.collect()}
-    want = {(r["query_id"], r["rank"], r["vec_id"], round(r["score"], 6))
-            for r in ref.collect()}
-    assert got == want and got
-
-    # pruning evidence: files actually read << files in the index
-    total_dirs = len(glob.glob(os.path.join(path, "band=*", "bucket=*")))
-    meta = json_load_bands(spark, path)
-    read_dirs = {
-        os.path.dirname(r[0])
-        for r in pruned_scan(spark, path, q, meta)
-        .select(F.input_file_name())
-        .distinct()
-        .collect()
-    }
-    assert total_dirs >= 40  # layout really fanned out
-    assert len(read_dirs) <= 3 * 3  # ≤ n_queries × n_bands partitions
-    assert len(read_dirs) < total_dirs / 3
-
-
-def json_load_bands(spark, path):
-    import json
-
-    from ontology_matcher_spark.functions.fs import fs_read_text
-
-    return json.loads(fs_read_text(spark, f"{path}/_ANN_META.json"))["bands"]
-
-
-def pruned_scan(spark, path, queries, bands):
-    """The probe's pruned read, reproduced for file accounting."""
-    from pyspark.sql import functions as F
-
-    from ontology_matcher_spark.operators.similarity import _with_band_buckets
-
-    qb = _with_band_buckets(
-        queries.select("query_id", F.col("query_vec").alias("__qv")),
-        "__qv", bands, ["query_id", "__qv"],
-    )
-    pred = None
-    for r in qb.select("band", "bucket").distinct().collect():
-        clause = (F.col("band") == int(r["band"])) & (
-            F.col("bucket") == int(r["bucket"])
-        )
-        pred = clause if pred is None else (pred | clause)
-    return spark.read.parquet(path).where(pred)
-
-
 def test_ivf_index_probe_recall_and_pruning(spark, tmp_path):
     """IVF scale path: centroids trained on a bounded sample, one
     vector copy partitioned by cluster, nprobe-pruned probe. On a
     clustered corpus the probe recovers the brute-force top-1 for
-    every query while reading only the probed clusters' partitions;
-    recall rises with nprobe."""
+    every query while its scan prunes to the probed clusters'
+    partitions; recall rises with nprobe."""
     import glob
     import os
+    import re
 
     import numpy as np
-    from pyspark.sql import functions as F
 
     from ontology_matcher_spark.operators.similarity import (
         brute_force_topk,
@@ -454,16 +280,19 @@ def test_ivf_index_probe_recall_and_pruning(spark, tmp_path):
     got = {r["query_id"]: r["id"] for r in probe.collect() if r["rank"] == 1}
     assert got == exact  # top-1 recall 100% on separated clusters
 
-    # pruning: files read cover <= nprobe distinct clusters per query
-    read_dirs = {
-        os.path.basename(os.path.dirname(r[0]))
-        for r in spark.read.parquet(path)
-        .where(F.col("cluster").isin(list(range(2))))
-        .select(F.input_file_name())
-        .distinct()
-        .collect()
+    # pruning: the probe's own index scan carries a cluster partition
+    # filter over <= nprobe x n_queries clusters, fewer than the index has
+    plan = probe._jdf.queryExecution().executedPlan().toString()
+    filters = re.findall(r"PartitionFilters: \[([^\]]*)\]", plan)
+    # (AQE prints the scan in its initial and its final plan)
+    probed = {
+        frozenset(re.findall(r"\d+", m))
+        for f in filters
+        for m in re.findall(r"cluster#\d+ (?:IN \(|INSET )([\d, ]+)", f)
     }
-    assert len(read_dirs) <= 2 < total_dirs
+    assert len(probed) == 1, plan
+    (clusters,) = probed
+    assert 0 < len(clusters) <= 2 * 6 and len(clusters) < total_dirs
 
     # recall monotone in nprobe: nprobe=n_centroids == brute force top-3
     exact3 = {(r["query_id"], r["vec_id"])
@@ -578,41 +407,6 @@ def test_ivf_probe_batch_matches_serving(spark, tmp_path):
     assert out.select("query_id").distinct().count() == 10_000
 
 
-def test_ann_probe_batch_matches_serving(spark, tmp_path):
-    """`ann_probe_batch` (queries hashed distributed, never collected)
-    matches the serving `ann_probe` exactly."""
-    import numpy as np
-
-    from ontology_matcher_spark.operators.similarity import (
-        ann_probe,
-        ann_probe_batch,
-        make_band_planes,
-        write_ann_index,
-    )
-
-    rng = np.random.default_rng(31)
-    base = rng.normal(size=(120, 16)).astype("float64")
-    df = spark.createDataFrame(
-        [(i, [float(x) for x in v]) for i, v in enumerate(base)],
-        ["vec_id", "embedding"],
-    )
-    q = spark.createDataFrame(
-        [
-            (int(i), [float(x) for x in base[i] + rng.normal(scale=0.02, size=16)])
-            for i in range(4)
-        ],
-        ["query_id", "query_vec"],
-    )
-    bands = make_band_planes(16, n_planes=5, n_bands=3, seed=17)
-    path = str(tmp_path / "ann_batch")
-    write_ann_index(df, bands, path)
-    serve = {(r["query_id"], r["rank"], r["id"], round(r["score"], 6))
-             for r in ann_probe(spark, path, q, k=5).collect()}
-    batch = {(r["query_id"], r["rank"], r["id"], round(r["score"], 6))
-             for r in ann_probe_batch(spark, path, q, k=5).collect()}
-    assert batch == serve and batch
-
-
 def test_write_ivf_index_excludes_malformed(spark, tmp_path):
     """Malformed/NULL vectors never enter the IVF index (they'd land
     in a cluster=-1 partition no probe reads — round-4 advisor), and
@@ -645,41 +439,59 @@ def test_write_ivf_index_excludes_malformed(spark, tmp_path):
 
 
 def test_probe_empty_query_schema_matches_nonempty(spark, tmp_path):
-    """The no-queries fallback derives its query-id type from the
-    queries frame (round-4 advisor: hardcoded string broke unions
-    with the long-id normal path)."""
+    """The no-queries fallback of both IVF probes derives its query-id
+    type from the queries frame (a hardcoded string broke unions with
+    the long-id normal path)."""
     import numpy as np
 
     from ontology_matcher_spark.operators.similarity import (
-        ann_probe,
         ivf_probe,
-        make_band_planes,
+        ivf_probe_batch,
         train_ivf_centroids,
-        write_ann_index,
         write_ivf_index,
     )
 
     rng = np.random.default_rng(3)
     rows, df = _clustered_corpus(spark, rng, n=40, dim=8, n_centers=4)
-    bands = make_band_planes(8, n_planes=4, n_bands=2, seed=9)
-    apath = str(tmp_path / "ann_empty")
-    write_ann_index(df, bands, apath)
-    ipath = str(tmp_path / "ivf_empty")
-    write_ivf_index(df, train_ivf_centroids(df, n_centroids=4, iters=3), ipath)
+    path = str(tmp_path / "ivf_empty")
+    write_ivf_index(df, train_ivf_centroids(df, n_centroids=4, iters=3), path)
 
     empty_q = spark.createDataFrame([], "query_id long, query_vec array<double>")
     full_q = spark.createDataFrame(
         [(0, rows[0][1])], ["query_id", "query_vec"]
     )
-    for probe, path in ((ann_probe, apath), (ivf_probe, ipath)):
+    for probe in (ivf_probe, ivf_probe_batch):
         e = probe(spark, path, empty_q, k=1)
         f = probe(spark, path, full_q, k=1)
         assert e.count() == 0
         assert [x.dataType for x in e.schema.fields] == [
             x.dataType for x in f.schema.fields
-        ]
+        ], probe.__name__
         # unions must not throw
         f.unionByName(e).count()
+
+
+def test_probe_rejects_non_ivf_path(spark, tmp_path):
+    """Both probes refuse a directory with no ``_IVF_META.json`` (an
+    empty one, or a banded-LSH index from before IVF was the one index
+    layout, which holds only ``_ANN_META.json``) with a ValueError
+    naming the path, not a TypeError from the missing metadata."""
+    from ontology_matcher_spark.operators.similarity import (
+        ivf_probe,
+        ivf_probe_batch,
+    )
+
+    empty = tmp_path / "empty"
+    empty.mkdir()
+    old = tmp_path / "banded"
+    old.mkdir()
+    (old / "_ANN_META.json").write_text('{"bands": [], "dim": 2}')
+    q = spark.createDataFrame([(0, [1.0, 0.0])], ["query_id", "query_vec"])
+    for probe in (ivf_probe, ivf_probe_batch):
+        for path in (str(empty), str(old)):
+            with pytest.raises(ValueError, match="not an IVF index") as ei:
+                probe(spark, path, q, k=1)
+            assert path in str(ei.value)
 
 
 # --------------------------------------------------- md5 hash variants
