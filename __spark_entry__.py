@@ -44,7 +44,7 @@ def _fx(spark: SparkSession, name: str) -> DataFrame:
 # ===================================================================
 def entry(spark: SparkSession) -> DataFrame:
     """Interleave sf0.001 documents into the north-rule span shape,
-    detect dictionary mentions (Arrow mapInPandas) against the FULL
+    detect dictionary mentions (Arrow mapInArrow) against the FULL
     fixture ontology + a corpus-vocabulary tier, and emit
     skos:exactMatch triples. The dictionary is built as a distributed
     artifact (no driver-side table collect) and loaded per executor —
@@ -609,9 +609,10 @@ def kg_xref_triples(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def kg_detected_mentions(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Dictionary mention detection over the fixture interleaved docs
-    (Arrow mapInPandas, distributed dictionary artifact; no SQL
-    oracle — n-gram dictionary matching is not SQL-expressible;
-    invariants covered in tests)."""
+    (Arrow mapInArrow, distributed dictionary artifact), best candidate
+    per mention. No SQL oracle: the ranked ladder over the gated exact
+    and fuzzy tiers is checked against the pure-Python
+    `oracle.best_candidates` in tests/test_mention_detect."""
     import uuid
 
     from ontology_matcher_spark.functions.materialize import scratch_root
@@ -637,7 +638,7 @@ def kg_detected_mentions(spark: SparkSession, sf_dir: str) -> DataFrame:
 def kg_detected_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The SQL-EXPRESSIBLE tier of mention detection under the DuckDB
     gate: normalized-surface (name/synonym) n-gram matches from the
-    PRODUCTION detector (mapInPandas + distributed artifact), deduped
+    PRODUCTION detector (mapInArrow + distributed artifact), deduped
     per (doc, span, surface, id). The oracle re-derives the same set
     relationally: explode document token n-grams up to
     _MAX_SURFACE_TOKENS and equi-join against the normalized
@@ -671,8 +672,8 @@ def kg_detected_fuzzy(spark: SparkSession, sf_dir: str) -> DataFrame:
     name/synonym n-gram match starting at their position, at edit
     distance 1 from a single-token dictionary NAME, resolved to that
     name's curies. The production path is the SymSpell
-    deletion-neighbourhood index inside the mapInPandas detector
-    (mention_detect._scan_text); the oracle re-derives it
+    deletion-neighbourhood index inside the mapInArrow detector
+    (mention_detect._fuzzy_curies); the oracle re-derives it
     relationally — token deletion-variants equi-joined to surface
     deletion-variants, verified with DuckDB's levenshtein ≤ 1 — the
     symmetric-deletion join restated in SQL. With this, only the

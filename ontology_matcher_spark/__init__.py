@@ -18,8 +18,8 @@ Spark dataflow:
   with lineage counters and checkpoint/resume.
 
 Everything is DataFrame/Catalyst; Python executes only inside
-Arrow-batched `mapInPandas` stages (mention detection, optional fuzzy
-scoring).
+Arrow-batched stages: `mapInArrow` mention detection and the
+`mapInPandas` media features.
 """
 
 __version__ = "0.1.0"

@@ -1,23 +1,29 @@
 """Stage 1 — dictionary-backed mention detection over interleaved
 text + media documents (north-rule input shape; SURVEY.md §2.10).
 
-The ONLY Python-executed stage of the pipeline: a `mapInPandas`
-iterator with a broadcast dictionary, Arrow-batched. Media spans are
-never touched — the detector reads ``kind == "text"`` spans only and
-emits a separate mention table keyed ``(doc_id, span_idx)``; the
-document rows themselves pass through unchanged (per-row
-span-sequence equality is the invariant under test).
+The ONLY Python-executed stage of the pipeline: a `mapInArrow`
+iterator whose kernel (`_detect_batch`) works on a whole Arrow batch
+at once. Media spans are never touched — the detector reads
+``kind == "text"`` spans only and emits a separate mention table keyed
+``(doc_id, span_idx)``; the document rows themselves pass through
+unchanged (per-row span-sequence equality is the invariant under
+test).
 
 Matching strategy: surface forms (term names + synonyms) are
-normalized (lowercase, punctuation→space) and indexed by token
-n-gram in a plain dict; literal CURIEs in text are found with one
-compiled regex and checked against the term-curie set (exact-id
-match, rank 0) or resolved through the xref-edge map (rank 1);
-unmatched long tokens fall through to a SymSpell-style edit-distance-1
-fuzzy tier (rank 4) — the north rule's full
-exact-id > xref > normalized-label > fuzzy ladder. If the optional
-``ahocorasick`` package is importable we use an automaton instead of
-the n-gram dict (same output; faster for 10^6-surface dictionaries).
+normalized (lowercase, punctuation→space). The kernel tokenizes every
+text span of the batch in one pass, builds the token n-grams of each
+surface width by shifted joins over the flat token array, and probes
+each width with ONE hash lookup (``index_in``) against that width's
+surfaces; hits expand to candidate rows by numpy repeat/take over a
+flat hit table built once per worker (`_assemble`). Literal CURIEs in
+text are found with one compiled regex (only texts containing ``:``)
+and checked against the term-curie set (exact-id match, rank 0) or
+resolved through the xref-edge map (rank 1); unmatched long tokens
+fall through to a SymSpell-style edit-distance-1 fuzzy tier (rank 4),
+probed once per unique token — the north rule's full
+exact-id > xref > normalized-label > fuzzy ladder. The plain per-span
+transcription of the same semantics is `oracle.detect_span`; the
+tests diff the kernel against it.
 
 The dictionary reaches executors one of two ways — never per task,
 never per row:
@@ -34,21 +40,18 @@ import re
 from collections import defaultdict
 from typing import Any
 
+import numpy as np
+import pyarrow as pa
+import pyarrow.compute as pc
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql.pandas.types import to_arrow_schema
 from pyspark.sql.types import (
     IntegerType,
     StringType,
     StructField,
     StructType,
 )
-
-try:  # optional fast path; absent in this container
-    import ahocorasick  # type: ignore
-
-    _HAS_AHOCORASICK = True
-except Exception:  # pragma: no cover
-    _HAS_AHOCORASICK = False
 
 _MAX_SURFACE_TOKENS = 6
 _NORM_RE = re.compile(r"[^a-z0-9]+")
@@ -64,6 +67,7 @@ MENTION_SCHEMA = StructType(
         StructField("match_type", StringType()),  # exact-id|xref|name|synonym|fuzzy
     ]
 )
+_ARROW_SCHEMA = to_arrow_schema(MENTION_SCHEMA)
 
 
 def normalize_text(s: str) -> str:
@@ -107,11 +111,6 @@ def build_dictionary(
     """Driver-side build of the matching dictionary from term rows
     (dicts with curie/name/synonyms) and optional xref-edge rows
     (src_curie/dst_curie). Broadcast the RESULT, not the term list.
-
-    Surfaces are indexed by FIRST TOKEN: the scan only materializes an
-    n-gram when the head token hits the index, which makes the common
-    (non-matching) position O(1) instead of O(max_tokens) string
-    builds. ahocorasick (if importable) would subsume this.
 
     Fuzzy tier: SymSpell-style symmetric-deletion index over
     single-token NAME surfaces (≥ _FUZZY_MIN_LEN chars) — a token at
@@ -161,23 +160,34 @@ def _assemble(
     xref_map: dict[str, str],
     fuzzy_index: dict[str, list[str]],
 ) -> dict[str, Any]:
-    """Shared final assembly: head-token index + max n-gram width."""
-    head_index: dict[str, list[tuple[tuple[str, ...], str, list]]] = defaultdict(list)
-    max_len = 1
-    for surface, hits in surface_map.items():
-        toks = tuple(surface.split())
-        if len(toks) > _MAX_SURFACE_TOKENS:
-            continue
-        max_len = max(max_len, len(toks))
-        head_index[toks[0]].append((toks, surface, hits))
+    """Shared final assembly: the kernel's probe tables.
+
+    Surfaces are normalized (single-spaced tokens), so a k-token
+    surface is its own k-gram key. ``width_keys[k-1]`` holds the
+    k-token surfaces (``index_in``'s value set for width k); numbering
+    the surfaces width by width gives each a global id g (offset by
+    ``width_base[k-1]``), and g owns rows ``hit_start[g]`` ..
+    ``hit_start[g+1]`` of the flat (``hit_id``, ``hit_type``) table.
+    Surfaces longer than _MAX_SURFACE_TOKENS are never matched."""
+    by_width: list[list[str]] = [[] for _ in range(_MAX_SURFACE_TOKENS)]
+    for surface in surface_map:
+        k = surface.count(" ") + 1
+        if k <= _MAX_SURFACE_TOKENS:
+            by_width[k - 1].append(surface)
+    order = [s for w in by_width for s in w]
+    hits = [surface_map[s] for s in order]
     return {
         "surfaces": dict(surface_map),
-        "head_index": dict(head_index),
         "curies": curie_set,
         "xref_map": xref_map,
         "fuzzy_index": fuzzy_index,
-        "max_tokens": max_len,
-        # per-dictionary memo for the fuzzy tier (see _scan_text)
+        "width_keys": [pa.array(w, pa.string()) for w in by_width],
+        "width_base": np.cumsum([0] + [len(w) for w in by_width]),
+        "hit_surface": pa.array(order, pa.string()),
+        "hit_start": np.cumsum([0] + [len(h) for h in hits]),
+        "hit_id": pa.array([c for h in hits for c, _ in h], pa.string()),
+        "hit_type": pa.array([mt for h in hits for _, mt in h], pa.string()),
+        # per-dictionary memo for the fuzzy tier (see _fuzzy_curies)
         "fuzzy_memo": {},
     }
 
@@ -264,117 +274,196 @@ def _artifact_stamp(fp_path: str) -> str:
         return ""
 
 
-def _scan_text(
-    text: str, d: dict[str, Any]
-) -> list[tuple[str, str, str]]:
-    """→ [(surface, curie, match_type)] for one text span."""
-    out: list[tuple[str, str, str]] = []
-    # exact-id (rank 0): literal CURIEs present in the dictionary;
-    # xref (rank 1): literal CURIEs resolving through a known edge
-    xref_map = d.get("xref_map") or {}
-    for m in _CURIE_RE.finditer(text):
-        curie = m.group(0)
-        if curie in d["curies"]:
-            out.append((curie, curie, "exact-id"))
-        elif curie in xref_map:
-            out.append((curie, xref_map[curie], "xref"))
-    # name/synonym (ranks 2/3): head-token index over normalized token
-    # stream — O(1) per non-matching position, n-gram built on head hits
-    tokens = normalize_text(text).split()
-    head_index = d["head_index"]
-    fuzzy_index = d.get("fuzzy_index") or {}
-    surfaces = d["surfaces"]
-    n = len(tokens)
-    for i in range(n):
-        tok = tokens[i]
-        hit_here = False
-        cands = head_index.get(tok)
-        if cands:
-            for toks, surface, hits in cands:
-                k = len(toks)
-                if i + k <= n and tuple(tokens[i : i + k]) == toks:
-                    hit_here = True
-                    for curie, mtype in hits:
-                        out.append((surface, curie, mtype))
-        # fuzzy (rank 4): single tokens at edit distance 1 from a
-        # dictionary NAME, only where nothing matched exactly. The
-        # deletion-neighbourhood probe allocates len(tok) strings per
-        # token — ~25% of kernel time profiled — and is a pure function
-        # of the token, so results are memoized per dictionary
-        # (vocabulary-bounded; cleared at _FUZZY_MEMO_MAX to bound a
-        # reused worker's memory on adversarial corpora)
-        if not hit_here and len(tok) >= _FUZZY_MIN_LEN:
-            memo = d.get("fuzzy_memo")
-            hits2 = memo.get(tok) if memo is not None else None
-            if hits2 is None:
-                hits2 = []
-                seen: set[str] = set()
-                for v in _deletions(tok) | {tok}:
-                    for surface in fuzzy_index.get(v, ()):
-                        if surface in seen or surface == tok:
-                            continue
-                        seen.add(surface)
-                        if _lev_le1(tok, surface):
-                            for curie, mtype in surfaces[surface]:
-                                if mtype == "name":
-                                    hits2.append((tok, curie, "fuzzy"))
-                if memo is not None:
-                    if len(memo) >= _FUZZY_MEMO_MAX:
-                        memo.clear()
-                    memo[tok] = hits2
-            out.extend(hits2)
+def _fuzzy_curies(tok: str, d: dict[str, Any]) -> list[str]:
+    """Curies of the dictionary NAMES at edit distance 1 from ``tok``.
+
+    The deletion-neighbourhood probe allocates len(tok) strings per
+    token and is a pure function of the token, so results are memoized
+    per dictionary (vocabulary-bounded; cleared at _FUZZY_MEMO_MAX to
+    bound a reused worker's memory on adversarial corpora)."""
+    memo = d["fuzzy_memo"]
+    out = memo.get(tok)
+    if out is None:
+        out = []
+        fuzzy_index = d["fuzzy_index"]
+        seen: set[str] = set()
+        for v in _deletions(tok) | {tok}:
+            for surface in fuzzy_index.get(v, ()):
+                if surface in seen or surface == tok:
+                    continue
+                seen.add(surface)
+                if _lev_le1(tok, surface):
+                    for curie, mtype in d["surfaces"][surface]:
+                        if mtype == "name":
+                            out.append(curie)
+        if len(memo) >= _FUZZY_MEMO_MAX:
+            memo.clear()
+        memo[tok] = out
     return out
 
 
-def _scan_batch(batch, d: dict):
-    """One Arrow batch of documents(doc_id, spans) → one batch of
-    mention rows (MENTION_SCHEMA columns)."""
-    import pyarrow as pa
+def _expand(counts: np.ndarray) -> tuple[np.ndarray, np.ndarray]:
+    """Group g owns ``counts[g]`` output rows → (group of each output
+    row, the row's index inside its group)."""
+    grp = np.repeat(np.arange(len(counts)), counts)
+    first = np.cumsum(counts) - counts
+    return grp, np.arange(len(grp)) - first[grp]
 
-    doc_ids = batch.column(0).to_pylist()
-    spans = batch.column(1)  # ListArray<StructArray>
-    # raw offsets index into .values absolutely (correct for sliced
-    # arrays too). A NULL span list need not have an empty offset
-    # range, so NULL slots are skipped by the validity bitmap — read
-    # only when the batch has nulls.
-    off = spans.offsets.to_pylist()
-    valid = spans.is_valid().to_pylist() if spans.null_count else None
-    vals = spans.values
-    kinds = vals.field("kind").to_pylist()
-    texts = vals.field("text").to_pylist()
-    soffs = vals.field("offset").to_pylist()
-    c_doc: list[str] = []
-    c_si: list[int] = []
-    c_off: list[int] = []
-    c_surface: list[str] = []
-    c_id: list[str] = []
-    c_mt: list[str] = []
-    for i, did in enumerate(doc_ids):
-        if valid is not None and not valid[i]:
+
+def _tokenize(texts: pa.Array) -> tuple[pa.Array, np.ndarray]:
+    """Non-null text array → (flat normalized tokens, row in ``texts``
+    of each token); per text the same tokens as
+    ``normalize_text(t).split()``.
+
+    ASCII texts lower in Arrow. Non-ASCII texts go through
+    `normalize_text` instead: ``utf8_lower`` maps U+0130 'İ' to 'i',
+    where ``str.lower`` and the JVM's ``lower`` (the artifact side,
+    `dictionary_build.normalize_surface`) give 'i' + U+0307."""
+    ascii_ = pc.string_is_ascii(texts)
+    lowered = pc.ascii_lower(texts)
+    if ascii_.false_count:
+        other = pc.invert(ascii_)
+        lowered = pc.replace_with_mask(
+            lowered,
+            other,
+            pa.array(
+                [normalize_text(t) for t in texts.filter(other).to_pylist()],
+                pa.string(),
+            ),
+        )
+    parts = pc.ascii_split_whitespace(
+        pc.replace_substring_regex(lowered, _NORM_RE.pattern, " ")
+    )
+    toks = parts.flatten()
+    parent = np.repeat(
+        np.arange(len(texts)), pc.list_value_length(parts).to_numpy()
+    )
+    # leading/trailing separators leave '' tokens; '' alone splits to ['']
+    keep = pc.greater(pc.binary_length(toks), 0)
+    return toks.filter(keep), parent[keep.to_numpy(zero_copy_only=False)]
+
+
+def _probe_surfaces(
+    toks: pa.Array, parent: np.ndarray, d: dict[str, Any]
+) -> tuple[np.ndarray, np.ndarray]:
+    """→ (token position, global surface id) of every dictionary
+    n-gram: per width k, the k-grams of the flat token array (shifted
+    joins) probed with one ``index_in``; grams that cross a text
+    boundary are dropped."""
+    n = len(toks)
+    pos_parts, sid_parts = [], []
+    for k, (keys, base) in enumerate(zip(d["width_keys"], d["width_base"]), 1):
+        if n < k or not len(keys):
             continue
-        base = off[i]
-        for j in range(base, off[i + 1]):
-            if kinds[j] != "text" or not texts[j]:
-                continue  # media spans pass through untouched
-            si = j - base
-            so = int(soffs[j])
-            for surface, curie, mtype in _scan_text(texts[j], d):
-                c_doc.append(did)
-                c_si.append(si)
-                c_off.append(so)
-                c_surface.append(surface)
-                c_id.append(curie)
-                c_mt.append(mtype)
+        m = n - k + 1
+        grams = (
+            toks
+            if k == 1
+            else pc.binary_join_element_wise(
+                *(toks.slice(j, m) for j in range(k)), " "
+            )
+        )
+        idx = pc.index_in(grams, value_set=keys)
+        hit = idx.is_valid()
+        pos = np.flatnonzero(hit.to_numpy(zero_copy_only=False))
+        sid = idx.filter(hit).to_numpy() + base
+        if k > 1:
+            same = parent[pos] == parent[pos + k - 1]
+            pos, sid = pos[same], sid[same]
+        pos_parts.append(pos)
+        sid_parts.append(sid)
+    if not pos_parts:
+        return np.zeros(0, np.int64), np.zeros(0, np.int64)
+    return np.concatenate(pos_parts), np.concatenate(sid_parts)
+
+
+def _detect_batch(batch: pa.RecordBatch, d: dict[str, Any]) -> pa.RecordBatch:
+    """One Arrow batch of documents(doc_id, spans) → one batch of
+    mention rows (MENTION_SCHEMA columns), all text spans at once."""
+    spans = batch.column(1)  # ListArray<StructArray>
+    # flatten() honours the slice offset and skips NULL slots even when
+    # their offset range is non-empty (Arrow does not require empty
+    # ranges under null slots), so parents come from the value lengths
+    # of the same view — not list_parent_indices, which counts the
+    # values under NULL slots
+    lens = pc.list_value_length(spans).fill_null(0).to_numpy()
+    vals = spans.flatten()
+    doc_of = np.repeat(np.arange(len(spans)), lens)
+    span_idx = np.arange(len(vals)) - np.repeat(np.cumsum(lens) - lens, lens)
+    text = vals.field("text")
+    is_text = pc.and_(
+        pc.equal(vals.field("kind"), "text"),
+        pc.greater(pc.binary_length(text), 0),
+    )  # media spans pass through untouched
+    sel = np.flatnonzero(is_text.fill_null(False).to_numpy(zero_copy_only=False))
+    texts = text.take(sel).cast(pa.string())
+
+    rows, surface, ids, mtype = [], [], [], []
+    # exact-id (rank 0): literal CURIEs present in the dictionary;
+    # xref (rank 1): literal CURIEs resolving through a known edge
+    colon = pc.match_substring(texts, ":")
+    found = []
+    for r, t in zip(
+        np.flatnonzero(colon.to_numpy(zero_copy_only=False)),
+        texts.filter(colon).to_pylist(),
+    ):
+        for m in _CURIE_RE.finditer(t):
+            curie = m.group(0)
+            if curie in d["curies"]:
+                found.append((r, curie, curie, "exact-id"))
+            elif curie in d["xref_map"]:
+                found.append((r, curie, d["xref_map"][curie], "xref"))
+    if found:
+        c_row, c_cur, c_id, c_mt = zip(*found)
+        rows.append(np.array(c_row, np.int64))
+        surface.append(pa.array(c_cur, pa.string()))
+        ids.append(pa.array(c_id, pa.string()))
+        mtype.append(pa.array(c_mt, pa.string()))
+
+    # name/synonym (ranks 2/3): one hash probe per n-gram width
+    toks, parent = _tokenize(texts)
+    pos, sid = _probe_surfaces(toks, parent, d)
+    start = d["hit_start"]
+    grp, nth = _expand(start[sid + 1] - start[sid])
+    flat = start[sid][grp] + nth
+    rows.append(parent[pos][grp])
+    surface.append(d["hit_surface"].take(sid[grp]))
+    ids.append(d["hit_id"].take(flat))
+    mtype.append(d["hit_type"].take(flat))
+
+    # fuzzy (rank 4): single tokens at edit distance 1 from a
+    # dictionary NAME, only where no surface matched exactly; the
+    # probe runs once per unique token
+    hit_at = np.zeros(len(toks), bool)
+    hit_at[pos] = True
+    cand = np.flatnonzero(
+        ~hit_at & (pc.binary_length(toks).to_numpy() >= _FUZZY_MIN_LEN)
+    )
+    enc = toks.take(cand).dictionary_encode()
+    per_tok = [_fuzzy_curies(t, d) for t in enc.dictionary.to_pylist()]
+    tok_start = np.cumsum([0] + [len(c) for c in per_tok])
+    code = enc.indices.to_numpy()
+    grp, nth = _expand(tok_start[code + 1] - tok_start[code])
+    rows.append(parent[cand][grp])
+    surface.append(enc.dictionary.take(code[grp]))
+    ids.append(
+        pa.array([c for cs in per_tok for c in cs], pa.string()).take(
+            tok_start[code][grp] + nth
+        )
+    )
+    mtype.append(pa.array(["fuzzy"]).take(np.zeros(len(grp), np.int64)))
+
+    row = sel[np.concatenate(rows)]
     return pa.RecordBatch.from_arrays(
         [
-            pa.array(c_doc, pa.string()),
-            pa.array(c_si, pa.int32()),
-            pa.array(c_off, pa.int32()),
-            pa.array(c_surface, pa.string()),
-            pa.array(c_id, pa.string()),
-            pa.array(c_mt, pa.string()),
+            batch.column(0).take(doc_of[row]).cast(pa.string()),
+            pa.array(span_idx[row], pa.int32()),
+            vals.field("offset").take(row).cast(pa.int32()),
+            pa.concat_arrays(surface),
+            pa.concat_arrays(ids),
+            pa.concat_arrays(mtype),
         ],
-        names=["doc_id", "span_idx", "offset", "surface", "id", "match_type"],
+        schema=_ARROW_SCHEMA,
     )
 
 
@@ -397,7 +486,7 @@ def detect_mentions(documents: DataFrame, dictionary) -> DataFrame:
             else dictionary.value
         )
         for batch in batches:  # pyarrow.RecordBatch
-            yield _scan_batch(batch, d)
+            yield _detect_batch(batch, d)
 
     # mapInArrow, not mapInPandas: the spans column is a list<struct>,
     # which the pandas path converts to a Python dict per span — at
@@ -435,7 +524,12 @@ def best_candidate_per_mention(mentions: DataFrame) -> DataFrame:
     match_type) is the total order; rows tying on (match_rank, id)
     are identical in the remaining fields (offset is constant per
     span, match_type is a function of match_rank), so the winner
-    matches the window form exactly."""
+    matches the window form exactly.
+
+    The physical plan is a ``SortAggregate`` on BOTH sides of the
+    exchange, not a hash aggregate: ``min`` of a struct with string
+    fields has no fixed-width aggregation buffer, so the partial and
+    the final aggregate each sort their input by the grouping key."""
     best = (
         rank_candidates(mentions)
         .groupBy("doc_id", "span_idx", "surface")

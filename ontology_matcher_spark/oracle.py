@@ -281,3 +281,112 @@ def canonical_assignment(
         for m in ns:
             canon[m] = c
     return canon
+
+
+# ------------------------------------------------------ mention detection
+#: tie-break ladder rank per match type (mention_detect.rank_candidates)
+MATCH_RANK = {"exact-id": 0, "xref": 1, "name": 2, "synonym": 3, "fuzzy": 4}
+
+
+def _one_edit_apart(a: str, b: str) -> bool:
+    """Levenshtein(a, b) == 1 for a != b: one substitution, or one
+    deletion from the longer string gives the shorter."""
+    if len(a) < len(b):
+        a, b = b, a
+    if len(a) == len(b):
+        return sum(x != y for x, y in zip(a, b)) == 1
+    return len(a) - len(b) == 1 and any(
+        a[:i] + a[i + 1 :] == b for i in range(len(a))
+    )
+
+
+def _fuzzy_names(d: dict) -> dict[int, list[tuple[str, list[str]]]]:
+    """Single-token NAME surfaces of ≥ _FUZZY_MIN_LEN chars, with their
+    name curies, bucketed by length."""
+    from ontology_matcher_spark.operators.mention_detect import _FUZZY_MIN_LEN
+
+    names: dict[int, list[tuple[str, list[str]]]] = defaultdict(list)
+    for surface, hits in d["surfaces"].items():
+        curies = [c for c, mt in hits if mt == "name"]
+        if " " not in surface and len(surface) >= _FUZZY_MIN_LEN and curies:
+            names[len(surface)].append((surface, curies))
+    return names
+
+
+def detect_span(
+    text: str, d: dict, names: dict | None = None
+) -> list[tuple[str, str, str]]:
+    """→ [(surface, curie, match_type)] for one text span, over a
+    `build_dictionary` / `load_detection_artifact` dictionary ``d``:
+    the plain transcription of the detection kernel's semantics.
+
+    - exact-id / xref: every literal CURIE that is a dictionary term,
+      or that resolves through ``d["xref_map"]``;
+    - name / synonym: at every token position, every width up to
+      _MAX_SURFACE_TOKENS looked up in the surface dict;
+    - fuzzy: a token of ≥ _FUZZY_MIN_LEN chars where no surface
+      starts, against every single-token NAME surface of ≥
+      _FUZZY_MIN_LEN chars one edit away (``names``: `_fuzzy_names`
+      of ``d``, computed when not given)."""
+    from ontology_matcher_spark.operators.mention_detect import (
+        _CURIE_RE,
+        _FUZZY_MIN_LEN,
+        _MAX_SURFACE_TOKENS,
+        normalize_text,
+    )
+
+    if names is None:
+        names = _fuzzy_names(d)
+    out: list[tuple[str, str, str]] = []
+    for m in _CURIE_RE.finditer(text):
+        curie = m.group(0)
+        if curie in d["curies"]:
+            out.append((curie, curie, "exact-id"))
+        elif curie in d["xref_map"]:
+            out.append((curie, d["xref_map"][curie], "xref"))
+    surfaces = d["surfaces"]
+    tokens = normalize_text(text).split()
+    for i, tok in enumerate(tokens):
+        hit = False
+        for k in range(1, min(_MAX_SURFACE_TOKENS, len(tokens) - i) + 1):
+            gram = " ".join(tokens[i : i + k])
+            if gram in surfaces:
+                hit = True
+                out.extend((gram, c, mt) for c, mt in surfaces[gram])
+        if hit or len(tok) < _FUZZY_MIN_LEN:
+            continue
+        for n in (len(tok) - 1, len(tok), len(tok) + 1):
+            for surface, curies in names.get(n, ()):
+                if _one_edit_apart(tok, surface):
+                    out.extend((tok, c, "fuzzy") for c in curies)
+    return out
+
+
+def detect_documents(documents: list[dict], d: dict) -> list[tuple]:
+    """Documents (doc_id, spans[kind, text, offset]) → candidate rows
+    (doc_id, span_idx, offset, surface, id, match_type), one per
+    `detect_span` hit of every non-empty text span."""
+    names = _fuzzy_names(d)
+    return [
+        (doc["doc_id"], si, span["offset"], surface, curie, mt)
+        for doc in documents
+        for si, span in enumerate(doc["spans"] or [])
+        if span["kind"] == "text" and span["text"]
+        for surface, curie, mt in detect_span(span["text"], d, names)
+    ]
+
+
+def best_candidates(rows: list[tuple]) -> list[tuple]:
+    """Candidate rows → one winner per (doc_id, span_idx, surface): the
+    lowest (match_rank, id, offset, match_type), as rows (doc_id,
+    span_idx, offset, surface, id, match_type, match_rank) sorted."""
+    best: dict[tuple, tuple] = {}
+    for doc_id, si, off, surface, curie, mt in rows:
+        key = (doc_id, si, surface)
+        cand = (MATCH_RANK[mt], curie, off, mt)
+        if key not in best or cand < best[key]:
+            best[key] = cand
+    return sorted(
+        (doc_id, si, off, surface, curie, mt, rank)
+        for (doc_id, si, surface), (rank, curie, off, mt) in best.items()
+    )

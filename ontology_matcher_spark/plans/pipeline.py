@@ -126,7 +126,7 @@ def detected_mentions_df(
 ) -> DataFrame:
     """Stage [1]: interleaved documents → mention-table rows.
 
-    Dictionary detection (Arrow mapInPandas) against a DISTRIBUTED
+    Dictionary detection (Arrow mapInArrow) against a DISTRIBUTED
     dictionary artifact: the surface/xref/fuzzy indexes are built as
     DataFrame jobs and written to parquet once
     (`write_detection_artifact`), then loaded lazily per executor —

@@ -3,7 +3,7 @@
 The reference is strictly batch (SURVEY.md §2.9) — nothing in parity
 needs streaming — but the stage layout is incremental-friendly by
 design, and this module is the door: a file-source stream of
-interleaved documents runs the SAME detection stage (`mapInPandas`
+interleaved documents runs the SAME detection stage (`mapInArrow`
 works identically on streaming DataFrames) and appends mention rows;
 downstream linking then runs as periodic batch over the mention delta.
 

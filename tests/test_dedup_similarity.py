@@ -1,10 +1,8 @@
 """Dedup + similarity operators: exactness of the baselines, recall of
 the approximate (LSH) paths vs the exact paths."""
 
-import math
 import random
 
-import pandas as pd
 import pytest
 from pyspark.sql import functions as F
 
@@ -12,7 +10,6 @@ from ontology_matcher_spark.operators.dedup import (
     exact_dedup,
     minhash_lsh_pairs,
     ngram_jaccard_pairs,
-    shingles,
 )
 from ontology_matcher_spark.operators.similarity import (
     brute_force_topk,
