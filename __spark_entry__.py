@@ -564,9 +564,8 @@ def kg_canonical(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     edges = _fx(spark, "xref_edges")
     terms = _fx(spark, "ontology_terms")
-    defaults = {t: ot.default for t, ot in ONTOLOGY_TYPES.items()}
     canon = canonical_assignment_by_label(
-        edges, terms.select("curie", "label"), defaults,
+        edges, terms.select("curie", "label"), ONTOLOGY_TYPES,
         src="src_curie", dst="dst_curie",
     )
     return canon.orderBy("node")

@@ -48,17 +48,6 @@ def _sql(c: Column | str) -> str:
     return text
 
 
-def label_case_sql(cases: dict, label: str, fn) -> str:
-    """SQL ``CASE WHEN label = k THEN fn(v) ...`` ladder over the
-    ``cases`` items; NULL for any other label. One ``F.expr`` of it is
-    the same Catalyst tree as the ``F.when`` chain at a fraction of the
-    py4j round trips."""
-    whens = " ".join(
-        f"WHEN {label} = {q(k)} THEN ({fn(v)})" for k, v in cases.items()
-    )
-    return f"(CASE {whens} END)"
-
-
 def split_pipe_sql(c: str) -> str:
     """Pipe-joined string → array<string> with empties removed.
 

@@ -7,14 +7,18 @@ Mirrors the reference's OntologyType instances (SURVEY.md §1.1):
 - Metabolite: /root/reference/ontology_matcher/metabolite/__init__.py:19-23
 - Symptom:    /root/reference/ontology_matcher/symptom/__init__.py:30-32
 
-Plain Python config — drives column lists and broadcast-dictionary
-selection; no Spark types needed.
+Plain Python config; ``type_table`` turns a ``types`` map into the
+one-row-per-label table that linking and CC join against.
 """
 
 from __future__ import annotations
 
 from dataclasses import dataclass, field
 from enum import Enum
+
+from pyspark.sql import DataFrame, SparkSession
+
+from ontology_matcher_spark.functions.arrays import q
 
 
 class Strategy(str, Enum):
@@ -80,6 +84,23 @@ ONTOLOGY_TYPES: dict[str, OntologyType] = {
 ALL_NAMESPACES: tuple[str, ...] = tuple(
     sorted({ns for t in ONTOLOGY_TYPES.values() for ns in t.choices})
 )
+
+
+def type_table(spark: SparkSession, types: dict[str, OntologyType]) -> DataFrame:
+    """``types`` as data: one row per label with the columns (label,
+    default, choices array<string>, metadata_mode). An inline VALUES
+    table, so the plan holds it as a LocalRelation: joining it is a
+    broadcast probe, and no expression grows with the number of types
+    or namespaces."""
+    rows = ", ".join(
+        f"({q(label)}, {q(o.default)}, array({', '.join(map(q, o.choices))}), "
+        f"{q(o.metadata_mode)})"
+        for label, o in types.items()
+    )
+    return spark.sql(
+        f"SELECT * FROM VALUES {rows} AS t(label, default, choices, metadata_mode)"
+    )
+
 
 # Reference id-format regex (ontology_formatter.py:292), local part
 # exactly as the reference: [a-z0-9A-Z.\*\+]+. We do NOT abort the run

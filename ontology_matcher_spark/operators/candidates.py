@@ -1,10 +1,10 @@
 """Stage 3+4 — per-type candidate generation + tie-break routing.
 
-One ontology type's view of the linking stage ``link_multi._route``:
-the xref dictionary pre-aggregated per source curie, one broadcast
-map-join against the mentions, and the routing ladder of the
-reference's _format_response (disease/__init__.py:102-178 — SURVEY.md
-§2.8 rules 1-4).
+One ontology type's view of the linking stage ``link_multi._route``
+over a one-row type table: the xref dictionary aggregated into the
+routing outcome per source curie, one broadcast join against the
+mentions — the rules of the reference's _format_response
+(disease/__init__.py:102-178 — SURVEY.md §2.8 rules 1-4).
 """
 
 from __future__ import annotations
@@ -23,5 +23,5 @@ def generate_candidates(
 ) -> DataFrame:
     """``validate_mentions`` rows × xref dictionary → idx, raw_id, ns,
     label, reason (NULL = converted), cand_default, aliases."""
-    pinned, types = single_type(valid_mentions, otype)
-    return _route(pinned, xref_edges, types, strategy)
+    pinned, tt = single_type(valid_mentions, otype)
+    return _route(pinned, xref_edges, tt, strategy)

@@ -23,12 +23,12 @@ import uuid
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from ontology_matcher_spark.functions.arrays import label_case_sql, q
 from ontology_matcher_spark.functions.materialize import (
     drop_materialized,
     materialize_at,
     scratch_root,
 )
+from ontology_matcher_spark.ontology_types import OntologyType, type_table
 
 
 def _sym(e: DataFrame) -> DataFrame:
@@ -224,15 +224,16 @@ def connected_components(
 def canonical_assignment_by_label(
     edges: DataFrame,
     node_labels: DataFrame,
-    label_defaults: dict[str, str],
+    types: dict[str, OntologyType],
     src: str = "src",
     dst: str = "dst",
 ) -> DataFrame:
     """ONE global CC over a multi-type graph, then a per-label
     canonical pick: min member in the label's default namespace, else
     min member (explicit form of the reference's stubbed dedup merge,
-    cli.py:201-245). ``node_labels``: DataFrame(curie, label); an
-    unlabelled node has no default namespace. Running CC
+    cli.py:201-245). ``node_labels``: DataFrame(curie, label); the
+    label's row of the ``types`` table gives its default namespace, and
+    an unlabelled node has none. Running CC
     once for all entity types matters — each CC is a serial driver
     loop whose fixed per-round latency does not parallelize, so five
     per-type loops cost 5× the non-scalable time of one.
@@ -242,9 +243,13 @@ def canonical_assignment_by_label(
     lbl = node_labels.groupBy(F.col("curie").alias("node")).agg(
         F.min("label").alias("label")
     )
-    defns = label_case_sql(label_defaults, "label", q)
-    nodes = cc.join(F.broadcast(lbl), "node", "left").selectExpr(
-        "node", "root", f"{defns} AS defns"
+    defaults = type_table(edges.sparkSession, types).selectExpr(
+        "label", "default AS defns"
+    )
+    nodes = (
+        cc.join(F.broadcast(lbl), "node", "left")
+        .join(F.broadcast(defaults), "label", "left")
+        .select("node", "root", "defns")
     )
     pick = nodes.groupBy("root").agg(
         F.coalesce(

@@ -1,9 +1,9 @@
 """Stage 2 — per-type CURIE validation (SURVEY.md §2.2 P1-P3).
 
-One ontology type's view of the linking stage ``link_multi._validate``:
-every row is checked against ``otype``'s namespaces and tagged with a
-failure reason, never raised — the reason strings stay stable for the
-failed side-channel.
+One ontology type's view of the linking stage ``link_multi._validate``
+over a one-row type table: every row is checked against ``otype``'s
+namespaces and tagged with a failure reason, never raised — the reason
+strings stay stable for the failed side-channel.
 """
 
 from __future__ import annotations

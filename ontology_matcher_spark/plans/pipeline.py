@@ -49,8 +49,8 @@ def link_mentions(
     """Stages 2-5 for one ontology type: mention table → (formatted,
     failed_formatted). Every row is linked as ``otype`` (its label is
     pinned), by the same stages as the multi-type run."""
-    pinned, types = link_multi.single_type(mentions, otype)
-    return link_multi.link_mentions_multi(pinned, xref_edges, terms, types, strategy)
+    pinned, tt = link_multi.single_type(mentions, otype)
+    return link_multi._link(pinned, tt, xref_edges, terms, strategy)
 
 
 def xref_pairs(formatted: DataFrame) -> DataFrame:
@@ -273,9 +273,8 @@ def build_pipeline_lazy(
         formatted.select("id", "raw_id", "label", "xrefs"), "formatted"
     )
 
-    defaults = {t: ONTOLOGY_TYPES[t].default for t in tnames}
     canon = canonical_assignment_by_label(
-        xref_pairs(formatted), terms.select("curie", "label"), defaults
+        xref_pairs(formatted), terms.select("curie", "label"), sel_types
     )
     # no materialize for canon: build_triples_multi consumes it once,
     # and its own inputs are already cheap to re-reference (the CC
@@ -507,9 +506,8 @@ def run_pipeline(
     # ONE global CC stage across all entity types (a per-type CC loop
     # multiplies the serial driver-round latency by the type count)
     def _canon() -> DataFrame:
-        defaults = {t: ONTOLOGY_TYPES[t].default for t in tnames}
         return canonical_assignment_by_label(
-            xref_pairs(formatted), terms.select("curie", "label"), defaults
+            xref_pairs(formatted), terms.select("curie", "label"), sel_types
         )
 
     canon = run.materialize("canonical", _canon)

@@ -44,18 +44,13 @@ def get_spark(
         .master(master)
         .config("spark.sql.shuffle.partitions", str(shuffle_partitions))
         .config("spark.sql.adaptive.enabled", "true")
-        # Catalyst's constraint-propagation rule is worst-case
-        # exponential over nested case-when trees — exactly the shape
-        # of our label-conditional routing ladders (a UNIQUE-strategy
-        # plan hung >9 min in the OPTIMIZER at round 1; filters still
-        # push down via the other rules). The conf exists for this.
-        .config("spark.sql.constraintPropagation.enabled", "false")
         # Spark's codegen class cache (an LRU, default 100 classes) is
         # smaller than this engine's working set. Measured with
         # tools/codegen_probe.py (4-vCPU VM): run_pipeline Gene+Disease
-        # generates 108 distinct classes (610 KB of bytecode) at
-        # kgbench large_ontology scale; the probe's five pipeline
-        # shapes 323-325 (2.5 MB) at fixture scale. At 100 each warm
+        # generates 130 distinct classes (590 KB of bytecode) at
+        # kgbench large_ontology scale, routed through the type table;
+        # the probe's five pipeline shapes were 323-325 (2.5 MB) at
+        # fixture scale with the earlier per-label code. At 100 each warm
         # Gene+Disease run Janino-recompiled 76-77 classes and the
         # probe's repeat pass 576, which the C2 JIT threads then
         # re-compiled too; at 1000 (~3x the working set) a warm run

@@ -8,6 +8,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from ontology_matcher_spark import oracle
+from ontology_matcher_spark.ontology_types import DISEASE
 from ontology_matcher_spark.operators.canonicalize import (
     canonical_assignment_by_label,
     connected_components,
@@ -66,7 +67,7 @@ def test_canonical_assignment_prefers_default_ns(spark):
     got = {
         r["node"]: r["canonical"]
         for r in canonical_assignment_by_label(
-            df, labels, {"Disease": "MONDO"}
+            df, labels, {"Disease": DISEASE}
         ).collect()
     }
     exp = oracle.canonical_assignment(edges, "MONDO")
